@@ -262,9 +262,9 @@ def _kg_linked(spark: SparkSession, sf_dir: str):
     alias = _alias_df(spark)
     toks = _tokens(spark, sf_dir)
     mentions = dict_mentions_fast(toks, alias, max_alias_len=2)
-    cmap = canonical_map(alias)
+    components = canonical_map(alias)
     linked = (
-        mentions.join(F.broadcast(cmap), "canonical_id", "left")
+        mentions.join(F.broadcast(components), "canonical_id", "left")
         .filter(F.col("component").isNotNull())
     )
     return linked, toks
@@ -402,70 +402,33 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["span_decode"] = span_decode
 
     def entity_prf1(spark, sf_dir):
-        gold = _spans(spark, sf_dir, GOLD_B, GOLD_I).select(
-            "doc_id", "sentence_id", "start_tok", "end_tok"
-        ).persist()
-        pred = _spans(spark, sf_dir, PRED_B, PRED_I).select(
-            "doc_id", "sentence_id", "start_tok", "end_tok"
-        ).persist()
-        key = ["doc_id", "sentence_id", "start_tok", "end_tok"]
-        try:
-            tp = pred.join(gold, key, "inner").count()
-            n_p, n_g = pred.count(), gold.count()
-        finally:
-            # the result below is a literal DF — release the span caches even
-            # if a counting job dies, or harness retries would accumulate
-            # dead persisted entries for the session lifetime
-            gold.unpersist()
-            pred.unpersist()
-        precision = tp / n_p if n_p else 0.0
-        recall = tp / n_g if n_g else 0.0
-        f1 = 2 * precision * recall / (precision + recall + 1e-20)
-        # round with F.round, NOT Python round(): Python rounds half-to-even
-        # (banker's), while Spark F.round and DuckDB ROUND round half away
-        # from zero — on a dyadic-rational ratio like 1/128 = 0.0078125 the
-        # two differ by 1e-6, far above the harness's 1e-9 float tolerance,
-        # so driver-side round() here was the contract's only third rounding
-        # semantic (same divergence class the quality_score micros fix
-        # closed)
-        return spark.createDataFrame(
-            [(tp, n_p, n_g, precision, recall, f1)],
-            "true_positives bigint, predicted bigint, gold bigint, "
-            "precision double, recall double, f1 double",
-        ).select(
+        from bioner_spark.metrics import entity_level_prf1
+
+        prf = entity_level_prf1(
+            _spans(spark, sf_dir, PRED_B, PRED_I), _spans(spark, sf_dir, GOLD_B, GOLD_I)
+        )
+        # F.round, NOT Python round(): Python rounds half-to-even, while
+        # Spark F.round and DuckDB ROUND round half away from zero — on a
+        # dyadic ratio like 1/128 = 0.0078125 the two differ by 1e-6
+        return prf.select(
             "true_positives",
             "predicted",
             "gold",
-            F.round("precision", 6).alias("precision"),
-            F.round("recall", 6).alias("recall"),
-            F.round("f1", 6).alias("f1"),
+            *(F.round(c, 6).alias(c) for c in ("precision", "recall", "f1")),
         )
 
     q["entity_prf1"] = entity_prf1
 
     def error_stats_by_length(spark, sf_dir):
-        gold = _spans(spark, sf_dir, GOLD_B, GOLD_I).select(
-            "doc_id", "sentence_id", "start_tok", "end_tok"
-        )
-        pred = _spans(spark, sf_dir, PRED_B, PRED_I).select(
-            "doc_id", "sentence_id", "start_tok", "end_tok"
-        )
-        key = ["doc_id", "sentence_id", "start_tok", "end_tok"]
-        g = gold.withColumn("len", F.col("end_tok") - F.col("start_tok") + 1)
-        errors = g.join(pred, key, "left_anti").groupBy("len").agg(
-            F.count(F.lit(1)).alias("n_errors")
-        )
-        totals = g.groupBy("len").agg(F.count(F.lit(1)).alias("n_total"))
-        return (
-            totals.join(errors, "len", "left")
-            .select(
-                F.col("len").cast("int").alias("len"),
-                F.coalesce(F.col("n_errors"), F.lit(0)).alias("n_errors"),
-                "n_total",
-                F.round(
-                    F.coalesce(F.col("n_errors"), F.lit(0)) / F.col("n_total"), 6
-                ).alias("error_ratio"),
-            )
+        from bioner_spark.metrics import error_stats_by_length as stats
+
+        return stats(
+            _spans(spark, sf_dir, PRED_B, PRED_I), _spans(spark, sf_dir, GOLD_B, GOLD_I)
+        ).select(
+            F.col("length").cast("int").alias("len"),
+            "n_errors",
+            "n_total",
+            F.round("error_ratio", 6).alias("error_ratio"),
         )
 
     q["error_stats_by_length"] = error_stats_by_length
@@ -562,40 +525,31 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def ensemble_spans(spark, sf_dir):
         """Ensemble intersection — spans predicted by BOTH models
         (SURVEY §2.6 A10 — reference analysis.py:106-114)."""
-        key = ["doc_id", "sentence_id", "start_tok", "end_tok"]
-        m1 = _spans(spark, sf_dir, PRED_B, PRED_I).select(*key, "mention_text")
-        m2 = _spans(spark, sf_dir, PRED2_B, PRED2_I).select(*key)
-        return m1.join(m2, key, "inner")
+        from bioner_spark.metrics import SPAN_KEY, ensemble_intersection
+
+        return ensemble_intersection(
+            _spans(spark, sf_dir, PRED_B, PRED_I).select(*SPAN_KEY, "mention_text"),
+            _spans(spark, sf_dir, PRED2_B, PRED2_I),
+        )
 
     q["ensemble_spans"] = ensemble_spans
 
     def overlap_stats(spark, sf_dir):
         """Pairwise FP/FN/TP overlap between two models' error analyses
         (SURVEY §2.6 A8+A11 — reference analysis.py:140-170)."""
-        key = ["doc_id", "sentence_id", "start_tok", "end_tok"]
+        from bioner_spark.metrics import SPAN_KEY, error_sets
+
         # persist the three span sets: the 9 counts below each launch a job,
         # and unpersisted they'd re-run the tokenize+decode lineage ~18×
-        gold = _spans(spark, sf_dir, GOLD_B, GOLD_I).select(*key).persist()
-        p1 = _spans(spark, sf_dir, PRED_B, PRED_I).select(*key).persist()
-        p2 = _spans(spark, sf_dir, PRED2_B, PRED2_I).select(*key).persist()
-
-        def sets(pred):
-            return (
-                pred.join(gold, key, "inner"),      # TP
-                pred.join(gold, key, "left_anti"),  # FP
-                gold.join(pred, key, "left_anti"),  # FN
-            )
-
-        tp1, fp1, fn1 = sets(p1)
-        tp2, fp2, fn2 = sets(p2)
+        gold = _spans(spark, sf_dir, GOLD_B, GOLD_I).select(*SPAN_KEY).persist()
+        p1 = _spans(spark, sf_dir, PRED_B, PRED_I).select(*SPAN_KEY).persist()
+        p2 = _spans(spark, sf_dir, PRED2_B, PRED2_I).select(*SPAN_KEY).persist()
+        kinds = ("true_positives", "false_positives", "false_negatives")
         try:
-            counts = (
-                tp1.join(tp2, key, "inner").count(),
-                fp1.join(fp2, key, "inner").count(),
-                fn1.join(fn2, key, "inner").count(),
-                tp1.count(), fp1.count(), fn1.count(),
-                tp2.count(), fp2.count(), fn2.count(),
-            )
+            s1, s2 = error_sets(p1, gold), error_sets(p2, gold)
+            counts = tuple(
+                s1[k].join(s2[k], SPAN_KEY, "inner").count() for k in kinds
+            ) + tuple(s[k].count() for s in (s1, s2) for k in kinds)
         finally:
             # release even on a failed count — retries must not accumulate
             # dead caches

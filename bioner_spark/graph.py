@@ -92,6 +92,28 @@ def _driver_union_find(rows: list, spark, node_type: str) -> DataFrame:
     )
 
 
+def _collect_if_small(df: DataFrame, max_rows: int) -> list | None:
+    """df's rows when it has at most max_rows of them, else None.
+
+    The gate is count-only: an over-limit df costs one cheap
+    limit(max_rows+1).count() and never moves full rows to the driver.
+    The limited df is persisted across the count and the collect, so the
+    upstream pipeline executes once, and the cache holds at most
+    max_rows+1 rows. The collect is re-checked: if the cache block was
+    lost and the source grew between the two jobs, None is returned
+    rather than a re-limited subset (union-find over it would silently
+    split components)."""
+    limited = df.limit(max_rows + 1).persist()
+    try:
+        if limited.count() <= max_rows:
+            rows = limited.collect()
+            if len(rows) <= max_rows:
+                return rows
+    finally:
+        limited.unpersist()
+    return None
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -115,29 +137,14 @@ def connected_components(
 
     checkpoint_dir: optional reliable checkpoint dir for the distributed
     path's per-round lineage truncation (see _truncate)."""
-    node_type = edges.schema[src].dataType.simpleString()
     if driver_threshold:
-        # persist the limited DF so the count gate and the collect share ONE
-        # computation of the upstream edge pipeline (for near_dup_clusters
-        # that pipeline is the full LSH-candidate + Jaccard chain); the
-        # cache holds at most threshold+1 two-column rows
-        limited = edges.select(src, dst).limit(driver_threshold + 1).persist()
-        try:
-            if limited.count() <= driver_threshold:
-                sample = limited.collect()
-                # re-check AFTER the collect (same growth guard as
-                # canonical_map): if the cache block was lost and the edge
-                # source grew/re-sampled between the count job and the
-                # collect job, union-find on the re-limited subset would
-                # silently return split components — go distributed instead
-                if len(sample) <= driver_threshold:
-                    return _driver_union_find(
-                        [(r[src], r[dst]) for r in sample],
-                        edges.sparkSession,
-                        node_type,
-                    )
-        finally:
-            limited.unpersist()
+        sample = _collect_if_small(edges.select(src, dst), driver_threshold)
+        if sample is not None:
+            return _driver_union_find(
+                [(r[src], r[dst]) for r in sample],
+                edges.sparkSession,
+                edges.schema[src].dataType.simpleString(),
+            )
     return connected_components_star(
         edges, src, dst, max_iterations, checkpoint_dir=checkpoint_dir
     )
@@ -332,66 +339,30 @@ def canonical_map(alias_dict: DataFrame, driver_threshold: int = 2_000_000) -> D
     jobs (refreshed parquet dir, non-deterministic upstream) can never move
     more than driver_threshold+1 rows to the driver — growth past the gate
     is detected and falls through to the distributed path."""
-    # persist the limited DF so the count gate and the collect share ONE
-    # computation of the upstream alias pipeline (same pattern as
-    # connected_components' gate above) — the cache holds at most
-    # threshold+1 two-column rows, and the limit bound means a source that
-    # grows between jobs can never move more than that to the driver
-    rows = None
-    limited = (
-        alias_dict.select("alias", "canonical_id")
-        .limit(driver_threshold + 1)
-        .persist()
+    rows = _collect_if_small(
+        alias_dict.select("alias", "canonical_id"), driver_threshold
     )
-    try:
-        if limited.count() <= driver_threshold:
-            rows = limited.collect()
-            if len(rows) > driver_threshold:
-                rows = None  # grew past the gate between jobs: go distributed
-    finally:
-        limited.unpersist()
     if rows is not None:
-        by_alias: dict = {}
-        ids: set = set()
-        has_null_id = False
-        for r in rows:
-            cid = r["canonical_id"]
-            if cid is None:
-                # the distributed path never forms an edge for a NULL id
-                # (src < dst is NULL) but its all-ids distinct still emits
-                # one (NULL, NULL) row — mirror both halves exactly
-                has_null_id = True
-                continue
-            ids.add(cid)
-            if r["alias"] is not None:
-                # NULL aliases share nothing: the distributed alias self-join
-                # drops them (SQL equi-join), so grouping them here would
-                # silently merge every NULL-alias entity into one KG node
-                by_alias.setdefault(r["alias"], []).append(cid)
-        parent: dict = {}
-
-        def find(x):
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for members in by_alias.values():
-            m0 = min(members)
-            for m in members:
-                ru, rv = find(m0), find(m)
-                if ru != rv:
-                    if rv < ru:
-                        ru, rv = rv, ru
-                    parent[rv] = ru
+        # one edge from each id to the first id seen under its alias, so
+        # union-find joins exactly the ids sharing an alias. NULL aliases
+        # share nothing (the distributed alias self-join drops them), so a
+        # NULL-alias id gets a self-edge and stays a singleton. A NULL id
+        # never forms an edge on the distributed path (src < dst is NULL),
+        # but its all-ids distinct still emits one (NULL, NULL) row.
+        first: dict = {}
+        edges = [
+            (cid if alias is None else first.setdefault(alias, cid), cid)
+            for alias, cid in rows
+            if cid is not None
+        ]
+        spark = alias_dict.sparkSession
         id_type = alias_dict.schema["canonical_id"].dataType.simpleString()
-        out = sorted((i, find(i)) for i in ids)
-        if has_null_id:
-            out.append((None, None))
-        return alias_dict.sparkSession.createDataFrame(
-            out, schema=f"canonical_id {id_type}, component {id_type}"
+        out = _driver_union_find(edges, spark, id_type).withColumnRenamed(
+            "node", "canonical_id"
         )
+        if any(cid is None for _, cid in rows):
+            out = out.union(spark.createDataFrame([(None, None)], out.schema))
+        return out
 
     from bioner_spark.linking import alias_edges
 

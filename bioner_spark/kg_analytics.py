@@ -330,108 +330,106 @@ def pagerank(
     # gazetteer chain, not a scan). A caller-shared projection
     # (_projected=True) skips the local persist.
     tr = triples if _projected else triples.select("subj", "obj").persist()
-    nodes = _entities(tr)
-    # adjacency carries the RAW out-degree/weights; per-edge contributions
-    # are aggregated as sum(rank / od) (or sum(rank * w / od) weighted) —
-    # the exact IEEE-double op sequences the DuckDB oracles use
-    # (SUM(r.rank / o.od), SUM(r.rank * e.w / o.od)). A precomputed 1/od
-    # weight would differ by up to 1 ulp per term and can flip a 6-dp
-    # rounding boundary on large graphs.
-    if weighted:
-        edges = (
-            tr.where(F.col("subj") != F.col("obj"))
-            .groupBy("subj", "obj")
-            .agg(F.count(F.lit(1)).cast("double").alias("w"))
-        )
-        outdeg = edges.groupBy("subj").agg(F.sum("w").alias("od"))
-        adj_cols = [
-            F.col("subj").alias("src"),
-            F.col("obj").alias("dst"),
-            "w",
-            "od",
-        ]
-    else:
-        edges = _directed_edges(tr)
-        outdeg = edges.groupBy("subj").agg(
-            F.count(F.lit(1)).cast("double").alias("od")
-        )
-        adj_cols = [
-            F.col("subj").alias("src"),
-            F.col("obj").alias("dst"),
-            "od",
-        ]
-    adj = edges.join(outdeg, "subj").select(*adj_cols).persist()
-    nodes = nodes.persist()
-    n = nodes.count()  # bounded driver scalar: |V|
-    if n == 0:
-        adj.unpersist()
-        nodes.unpersist()
-        if not _projected:
-            tr.unpersist()
-        return triples.sparkSession.createDataFrame(
-            [], "entity string, rank double"
-        )
-    ranks = _truncate(
-        nodes.select("entity", F.lit(1.0 / n).alias("rank")), checkpoint_dir
-    )
-    src_set = adj.select(F.col("src").alias("entity")).distinct()
-    for _ in range(iterations):
-        # dangling mass: rank held by nodes with no outgoing edge — a
-        # 1-row aggregate broadcast into the update join, so an iteration
-        # is ONE job and nothing round-trips through the driver
-        dangling = ranks.join(src_set, "entity", "left_anti").agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
-        )
-        contrib_term = (
-            F.col("rank") * F.col("w") / F.col("od")
-            if weighted
-            else F.col("rank") / F.col("od")
-        )
-        contribs = (
-            adj.join(ranks, adj.src == ranks.entity)
-            .groupBy("dst")
-            .agg(F.sum(contrib_term).alias("c"))
-        )
-        new_ranks = (
-            nodes.join(contribs, nodes.entity == contribs.dst, "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "entity",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("c"), F.lit(0.0))
-                        + F.col("dm") / F.lit(float(n))
-                    )
-                ).alias("rank"),
+    # every cache this call made; released however the call ends
+    held = [] if _projected else [tr]
+    try:
+        nodes = _entities(tr)
+        # adjacency carries the RAW out-degree/weights; per-edge contributions
+        # are aggregated as sum(rank / od) (or sum(rank * w / od) weighted) —
+        # the exact IEEE-double op sequences the DuckDB oracles use
+        # (SUM(r.rank / o.od), SUM(r.rank * e.w / o.od)). A precomputed 1/od
+        # weight would differ by up to 1 ulp per term and can flip a 6-dp
+        # rounding boundary on large graphs.
+        if weighted:
+            edges = (
+                tr.where(F.col("subj") != F.col("obj"))
+                .groupBy("subj", "obj")
+                .agg(F.count(F.lit(1)).cast("double").alias("w"))
             )
+            outdeg = edges.groupBy("subj").agg(F.sum("w").alias("od"))
+            adj_cols = [
+                F.col("subj").alias("src"),
+                F.col("obj").alias("dst"),
+                "w",
+                "od",
+            ]
+        else:
+            edges = _directed_edges(tr)
+            outdeg = edges.groupBy("subj").agg(
+                F.count(F.lit(1)).cast("double").alias("od")
+            )
+            adj_cols = [
+                F.col("subj").alias("src"),
+                F.col("obj").alias("dst"),
+                "od",
+            ]
+        adj = edges.join(outdeg, "subj").select(*adj_cols).persist()
+        nodes = nodes.persist()
+        held += [adj, nodes]
+        n = nodes.count()  # bounded driver scalar: |V|
+        if n == 0:
+            return triples.sparkSession.createDataFrame(
+                [], "entity string, rank double"
+            )
+        ranks = _truncate(
+            nodes.select("entity", F.lit(1.0 / n).alias("rank")), checkpoint_dir
         )
-        prev = ranks
-        ranks = _truncate(new_ranks, checkpoint_dir)
-        if tol is not None:
-            # L1 delta vs the previous round — one job, one scalar back
-            l1 = (
-                ranks.alias("a")
-                .join(prev.alias("b"), "entity")
-                .agg(
-                    F.coalesce(
-                        F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))),
-                        F.lit(0.0),
-                    ).alias("l1")
+        src_set = adj.select(F.col("src").alias("entity")).distinct()
+        for _ in range(iterations):
+            # dangling mass: rank held by nodes with no outgoing edge — a
+            # 1-row aggregate broadcast into the update join, so an iteration
+            # is ONE job and nothing round-trips through the driver
+            dangling = ranks.join(src_set, "entity", "left_anti").agg(
+                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
+            )
+            contrib_term = (
+                F.col("rank") * F.col("w") / F.col("od")
+                if weighted
+                else F.col("rank") / F.col("od")
+            )
+            contribs = (
+                adj.join(ranks, adj.src == ranks.entity)
+                .groupBy("dst")
+                .agg(F.sum(contrib_term).alias("c"))
+            )
+            new_ranks = (
+                nodes.join(contribs, nodes.entity == contribs.dst, "left")
+                .crossJoin(F.broadcast(dangling))
+                .select(
+                    "entity",
+                    (
+                        F.lit((1.0 - damping) / n)
+                        + F.lit(damping)
+                        * (
+                            F.coalesce(F.col("c"), F.lit(0.0))
+                            + F.col("dm") / F.lit(float(n))
+                        )
+                    ).alias("rank"),
                 )
-                .collect()[0]["l1"]
             )
-            if l1 <= tol:
-                break
-    out = ranks.select("entity", F.round("rank", 6).alias("rank"))
-    # `out` reads the final round's checkpointed blocks (plan already cut
-    # from the pipeline lineage), so the upstream caches can go now
-    adj.unpersist()
-    nodes.unpersist()
-    if not _projected:
-        tr.unpersist()
-    return out
+            prev = ranks
+            ranks = _truncate(new_ranks, checkpoint_dir)
+            if tol is not None:
+                # L1 delta vs the previous round — one job, one scalar back
+                l1 = (
+                    ranks.alias("a")
+                    .join(prev.alias("b"), "entity")
+                    .agg(
+                        F.coalesce(
+                            F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))),
+                            F.lit(0.0),
+                        ).alias("l1")
+                    )
+                    .collect()[0]["l1"]
+                )
+                if l1 <= tol:
+                    break
+        # reads the final round's checkpointed blocks (plan already cut from
+        # the pipeline lineage), so the caches can go in the finally below
+        return ranks.select("entity", F.round("rank", 6).alias("rank"))
+    finally:
+        for df in held:
+            df.unpersist()
 
 
 def khop_neighbors(
@@ -460,26 +458,29 @@ def khop_neighbors(
     # the upstream triple lineage; _projected=True means the caller
     # already persisted the (subj, obj) projection and owns its lifetime
     tr = triples if _projected else triples.select("subj", "obj").persist()
-    edges = _directed_edges(tr).persist()
-    seeds = (
-        _entities(tr)
-        .orderBy("entity")
-        .limit(n_seeds)
-        .select("entity", F.lit(0).alias("hops"))
-    )
-    visited = _truncate(seeds, checkpoint_dir)
-    frontier = visited.select("entity")
-    for hop in range(1, k + 1):
-        discovered = (
-            edges.join(frontier, edges.subj == frontier.entity)
-            .select(F.col("obj").alias("entity"))
-            .distinct()
-            .join(visited.select("entity"), "entity", "left_anti")
-            .select("entity", F.lit(hop).alias("hops"))
+    held = [] if _projected else [tr]
+    try:
+        edges = _directed_edges(tr).persist()
+        held.append(edges)
+        seeds = (
+            _entities(tr)
+            .orderBy("entity")
+            .limit(n_seeds)
+            .select("entity", F.lit(0).alias("hops"))
         )
-        visited = _truncate(visited.unionByName(discovered), checkpoint_dir)
-        frontier = visited.where(F.col("hops") == hop).select("entity")
-    edges.unpersist()
-    if not _projected:
-        tr.unpersist()
-    return visited.select("entity", F.col("hops").cast("int").alias("hops"))
+        visited = _truncate(seeds, checkpoint_dir)
+        frontier = visited.select("entity")
+        for hop in range(1, k + 1):
+            discovered = (
+                edges.join(frontier, edges.subj == frontier.entity)
+                .select(F.col("obj").alias("entity"))
+                .distinct()
+                .join(visited.select("entity"), "entity", "left_anti")
+                .select("entity", F.lit(hop).alias("hops"))
+            )
+            visited = _truncate(visited.unionByName(discovered), checkpoint_dir)
+            frontier = visited.where(F.col("hops") == hop).select("entity")
+        return visited.select("entity", F.col("hops").cast("int").alias("hops"))
+    finally:
+        for df in held:
+            df.unpersist()

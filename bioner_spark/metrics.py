@@ -93,10 +93,10 @@ def error_stats_by_length(pred: DataFrame, gold: DataFrame) -> DataFrame:
 
 
 def ensemble_intersection(pred_a: DataFrame, pred_b: DataFrame) -> DataFrame:
-    """Spans predicted by BOTH models (reference analysis.py:106-114)."""
-    return pred_a.select(*SPAN_KEY).distinct().join(
-        pred_b.select(*SPAN_KEY).distinct(), SPAN_KEY, "inner"
-    )
+    """Spans predicted by BOTH models (reference analysis.py:106-114):
+    pred_a's rows, with any extra columns such as mention_text, whose span
+    pred_b also predicts."""
+    return pred_a.join(pred_b.select(*SPAN_KEY), SPAN_KEY, "left_semi")
 
 
 def sample_error_sentences(
@@ -190,22 +190,3 @@ def human_format(col):
         (magnitude + 1).cast("int"),
     )
     return F.concat(F.format_number(scaled, 2), F.coalesce(suffix, F.lit("")))
-
-
-def token_level_confusion(tokens_pred: DataFrame, tokens_gold: DataFrame) -> DataFrame:
-    """Token-level confusion counts (reference scibert_eval.py:80-90 computes
-    micro/macro P/R/F1 via sklearn; the engine exposes the confusion matrix
-    as a groupBy and derives ratios in SQL).
-
-    FULL OUTER, not inner: a model that emits no row for some tokens must
-    show those gold tokens as '<missing>' errors — an inner join would
-    silently drop them, letting a 50%-coverage model score like a full
-    one."""
-    key = ["doc_id", "sentence_id", "token_id"]
-    joined = tokens_gold.select(*key, F.col("tag").alias("gold_tag")).join(
-        tokens_pred.select(*key, F.col("tag").alias("pred_tag")), key, "full_outer"
-    )
-    return joined.groupBy(
-        F.coalesce("gold_tag", F.lit("<missing>")).alias("gold_tag"),
-        F.coalesce("pred_tag", F.lit("<missing>")).alias("pred_tag"),
-    ).agg(F.count(F.lit(1)).alias("n"))

@@ -13,7 +13,9 @@ and completion time. On restart, buckets already in the manifest with a
 matching fingerprint are SKIPPED (their partition dirs are left untouched);
 everything else is recomputed and idempotently overwritten
 (partitionOverwriteMode=dynamic). Kill the job at any point and rerun — the
-result converges to the same table.
+result converges to the same table. run_checkpointed returns that table
+read back from disk, with the processed/skipped bucket counts and the
+per-bucket lineage; it keeps no cache alive after it returns or raises.
 
 Skew handling: pages are repartitioned by hash(url) before the tokenize→tag
 stages — a few hosts owning ~30% of a crawl (corpus.py models this) spread
@@ -29,10 +31,12 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from bioner_spark.extract import with_extracted_text
 from bioner_spark.graph import canonical_map
 from bioner_spark.linking import dict_mentions, dict_tag_tokens, link_mentions
+from bioner_spark.schemas import TRIPLES_SCHEMA
 from bioner_spark.spans import decode_spans
 from bioner_spark.tokenizer import tokenize
 from bioner_spark.triples import extract_triples
@@ -41,8 +45,9 @@ from bioner_spark.triples import extract_triples
 @dataclass
 class PipelineResult:
     triples: DataFrame
-    mentions: DataFrame
-    tokens: DataFrame
+    # build_triples only; run_checkpointed returns None for both
+    mentions: DataFrame | None
+    tokens: DataFrame | None
     n_buckets_processed: int = 0
     n_buckets_skipped: int = 0
     # DataFrames build_triples persisted for stage reuse; callers that are
@@ -67,20 +72,24 @@ def build_triples(
     model=None,
     vocab=None,
     use_extractor: bool = True,
-    eager_cache: bool = True,
     ft_model=None,
-    cmap: DataFrame | None = None,
 ) -> PipelineResult:
     """The logical plan for the whole pipeline (no writes).
 
-    eager_cache: materialize the persisted token/tag hub with one count()
-    before returning. Without it, the final job's independent exchanges
-    (candidates, tag join-back, verb scan) are submitted CONCURRENTLY by
-    AQE, each misses the still-empty cache, and each recomputes the full
-    extract+tokenize lineage — measured 4× redundant CPU at 32 cores (and,
-    perversely, anti-scaling: more cores → more concurrent cache misses).
-    One eager pass costs one traversal and makes every later read a cache
-    hit."""
+    Eager: canonical_map's 1-2 small jobs over alias_dict, then one count()
+    that materializes the persisted token/tag hub before returning. Without
+    that count, the final job's independent exchanges (candidates, tag
+    join-back, verb scan) are submitted CONCURRENTLY by AQE, each misses the
+    still-empty cache, and each recomputes the full extract+tokenize lineage
+    — measured 4× redundant CPU at 32 cores (and, perversely, anti-scaling:
+    more cores → more concurrent cache misses). One eager pass costs one
+    traversal and makes every later read a cache hit. The hub is returned
+    in `persisted` for the caller to release; if building raises, it is
+    released here."""
+    if tagger not in ("dict", "neural"):
+        raise ValueError(f"unknown tagger: {tagger}")
+    # depends only on alias_dict; run before anything is persisted
+    components = canonical_map(alias_dict)
     # (doc_key, url) map for the output joins — derived from the RAW input
     # so its lineage is a column-pruned scan of `url` alone; deriving it
     # downstream would drag the extractor UDF + repartition exchange into
@@ -151,47 +160,42 @@ def build_triples(
     tokens = tokenize(pages, doc_col="doc_key", with_offsets=False).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-
-    if eager_cache:
+    persisted = (tokens,)
+    try:
         tokens.count()
-
-    if tagger == "dict":
-        # gazetteer fast path: resolved dictionary matches ARE the mention
-        # spans — no BIO tag join-back, no window re-decode (see
-        # linking.dict_mentions). `tagged` stays a lazy parity view.
-        # already linked: gazetteer matches carry canonical_id (min-id
-        # ambiguity rule — same rule link_mentions applies)
-        mentions = dict_mentions(tokens, alias_dict)
-        # share the already-built mention spans: the parity tag view must
-        # not re-plan the whole gazetteer chain over the token table
-        tagged = dict_tag_tokens(tokens, alias_dict, spans=mentions)
-        linked = mentions
-    elif tagger == "neural":
-        from bioner_spark.ner.infer import annotate_tokens, annotate_tokens_fasttext
-
-        if ft_model is not None:
-            # BioNER-shape encode: fastText subword embeddings (e.g. a real
-            # .bin loaded by fasttext_bin.load_bin) instead of the trigram
-            # multi-hot vocab — reference fasttext_encoder.py:17-28
-            assert model is not None
-            tagged = annotate_tokens_fasttext(tokens, ft_model, model)
+        if tagger == "dict":
+            # gazetteer fast path: resolved dictionary matches ARE the
+            # mention spans — no BIO tag join-back, no window re-decode (see
+            # linking.dict_mentions). `tagged` stays a lazy parity view.
+            # already linked: gazetteer matches carry canonical_id (min-id
+            # ambiguity rule — same rule link_mentions applies)
+            mentions = dict_mentions(tokens, alias_dict)
+            # share the already-built mention spans: the parity tag view
+            # must not re-plan the whole gazetteer chain over the token table
+            tagged = dict_tag_tokens(tokens, alias_dict, spans=mentions)
+            linked = mentions
         else:
-            assert model is not None and vocab is not None
-            tagged = annotate_tokens(tokens, vocab, model)
-        tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
-        if eager_cache:
+            from bioner_spark.ner.infer import annotate_tokens, annotate_tokens_fasttext
+
+            if ft_model is not None:
+                # BioNER-shape encode: fastText subword embeddings (e.g. a
+                # real .bin loaded by fasttext_bin.load_bin) instead of the
+                # trigram multi-hot vocab — reference fasttext_encoder.py:17-28
+                assert model is not None
+                tagged = annotate_tokens_fasttext(tokens, ft_model, model)
+            else:
+                assert model is not None and vocab is not None
+                tagged = annotate_tokens(tokens, vocab, model)
+            tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
+            persisted += (tagged,)
             tagged.count()
-        mentions = decode_spans(tagged)
-        linked = link_mentions(mentions, alias_dict)
-    else:
-        raise ValueError(f"unknown tagger: {tagger}")
-    if cmap is None:
-        # eager 1-2 Spark jobs (count gate + collect + union-find) whose
-        # result depends only on alias_dict — callers invoking
-        # build_triples twice per run (run_checkpointed's write plan + aux
-        # view) pass it in so the jobs run once
-        cmap = canonical_map(alias_dict)
-    linked = linked.join(F.broadcast(cmap), "canonical_id", "left")
+            mentions = decode_spans(tagged)
+            linked = link_mentions(mentions, alias_dict)
+    except BaseException:
+        for df in persisted:
+            df.unpersist()
+        raise
+    linked = linked.join(F.broadcast(components), "canonical_id", "left")
     # unlinkable mentions (neural path, surface form outside alias_dict →
     # canonical_id/component NULL) are dropped from the TRIPLE stream only
     # — pairs read `component` — but stay in the returned mentions, per
@@ -219,13 +223,22 @@ def build_triples(
         ),
         mentions=_rekey(linked),
         tokens=tagged,
-        persisted=(tokens, tagged) if tagger == "neural" else (tokens,),
+        persisted=persisted,
     )
 
 
 # --------------------------------------------------------------------------
 # Checkpointed, partition-manifest write path
 # --------------------------------------------------------------------------
+
+# The triples table as run_checkpointed reads it back. Every field is
+# nullable because file sources report every column nullable; the empty
+# table of a run with nothing on disk uses the same schema.
+TRIPLES_TABLE_SCHEMA = T.StructType(
+    [T.StructField(f.name, f.dataType, True) for f in TRIPLES_SCHEMA.fields]
+    + [T.StructField("bucket", T.IntegerType(), True)]
+)
+
 
 def _bucket_col(n_buckets: int, col: str = "url"):
     return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
@@ -409,10 +422,20 @@ def run_checkpointed(
     config_token: str | None = None,
     config_covers_corpus: bool = False,
 ) -> PipelineResult:
-    """Run the pipeline bucket-partitioned with resume.
+    """Run the pipeline bucket-partitioned with resume and return what it
+    wrote.
 
     out_dir/triples/  — Parquet partitioned by bucket
     out_dir/manifest/ — per-bucket lineage rows (append-only; latest wins)
+
+    Returns a PipelineResult holding `triples` — the whole on-disk table
+    read back (TRIPLES_TABLE_SCHEMA, whether this run recomputed every
+    bucket, some, none, or had no input at all) — plus
+    n_buckets_processed / n_buckets_skipped and bucket_lineage.
+    `mentions` and `tokens` are None and `persisted` is empty: the write
+    plan's token cache is released before returning, on success and on
+    failure alike. A run whose buckets are all skipped runs no job over
+    alias_dict. Callers wanting mentions or tokens call build_triples.
 
     config_token: identifies every TAGGING-RELEVANT configuration — tagger
     kind, model/embedding artifact identity, alias-dict version. The input
@@ -431,16 +454,6 @@ def run_checkpointed(
     recompute — the table converges to what a fresh run would produce
     instead of keeping stale-vocab buckets.
     """
-    import os
-    import time as _time
-
-    _timing = os.environ.get("SPARK_KG_TIMING") == "1"
-    _t0 = _time.time()
-
-    def _mark(phase: str) -> None:
-        if _timing:
-            print(f"[kg_timing] {phase} +{_time.time() - _t0:.1f}s", flush=True)
-
     triples_path = f"{out_dir}/triples"
     manifest_path = f"{out_dir}/manifest"
 
@@ -468,7 +481,6 @@ def run_checkpointed(
             }
             for r in fp_rows
         ]
-    _mark("fingerprints")
     manifest = read_manifest(spark, manifest_path)
     done_fp: dict[int, str] = {}
     if manifest is not None:
@@ -528,11 +540,6 @@ def run_checkpointed(
     todo_buckets = [r["bucket"] for r in todo_rows]
     n_skipped = len(fp_rows) - len(todo_buckets)
 
-    # alias-dict canonicalization once per run: its eager jobs (count gate
-    # + collect + union-find) depend only on alias_dict, and a partial
-    # resume otherwise pays them twice (write plan + aux view below)
-    cmap_shared = canonical_map(alias_dict)
-
     if todo_buckets:
         # only built when consumed (the pending append + the done-row join
         # below); todo_rows is non-empty here so no placeholder row needed
@@ -551,122 +558,90 @@ def run_checkpointed(
             vocab=vocab,
             use_extractor=use_extractor,
             ft_model=ft_model,
-            cmap=cmap_shared,
         )
-        _mark("build_triples(+eager cache)")
-        # triples carry the page url as doc_id → same bucketing function
-        out = result.triples.withColumn("bucket", _bucket_col(n_buckets, "doc_id"))
-        # co-locate each bucket into one task before partitionBy — otherwise
-        # every write task opens a file per bucket it sees (tasks × buckets
-        # small files; at 1000 executors that's a metadata storm)
-        out = out.repartition(n_buckets, "bucket")
-        # void each todo bucket's 'done' row BEFORE deleting its partition:
-        # without the pending row, a crash after the delete leaves the old
-        # 'done' row as the latest — and a later run whose input reverts to
-        # that fingerprint (restored snapshot, retried orchestration) would
-        # match it and skip the bucket whose data was deleted, silently
-        # serving a table missing those rows forever. One extra tiny append
-        # per run with todo work; the successful path's 'done' rows below
-        # supersede these by timestamp.
-        (
-            todo.select(
-                "bucket",
-                F.lit(None).cast("string").alias("input_fingerprint"),
-                F.lit(0).cast("long").alias("n_rows"),
-                "n_docs",
-                F.current_timestamp().alias("completed_at"),
-                F.lit("pending").alias("status"),
+        try:
+            # triples carry the page url as doc_id → same bucketing function
+            out = result.triples.withColumn(
+                "bucket", _bucket_col(n_buckets, "doc_id")
             )
-            .write.mode("append")
-            .parquet(manifest_path)
-        )
-        # clear every todo partition BEFORE the write: dynamic overwrite
-        # only replaces partitions PRESENT in the written data, so a todo
-        # bucket whose recompute yields ZERO triples would otherwise keep
-        # its stale files (and the read-back below would count them into
-        # the manifest). A crash between delete and the final manifest
-        # write leaves the 'pending' row latest → recomputed next run.
-        # Visibility tradeoff, accepted: a concurrent reader of the triples
-        # dir sees todo buckets ABSENT while the recompute runs (before,
-        # it saw their stale previous contents — and a mixed old/new table
-        # during the overwrite commit, which is no better). This table is
-        # job-owned during a run; serving readers across rewrites is a
-        # snapshot-table-format concern (write new snapshot dir, flip a
-        # pointer — what Iceberg does), not a bucket-overwrite one.
-        _delete_bucket_partitions(spark, triples_path, todo_buckets)
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(triples_path)
-        )
-        _mark("triples write")
-        # manifest rows AFTER a successful write (crash before this line →
-        # bucket is simply recomputed next run; writes are idempotent).
-        # Schema-pinned read: a run whose todo buckets all produced zero
-        # triples leaves no data files to infer from.
-        written = _read_triples(spark, triples_path, out.schema).filter(
-            F.col("bucket").isin(todo_buckets)
-        )
-        rows = (
-            written.groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("n_rows"))
-            .join(todo.select("bucket", "input_fingerprint", "n_docs"), "bucket", "right")
-            .select(
-                F.col("bucket"),
-                F.col("input_fingerprint"),
-                F.coalesce(F.col("n_rows"), F.lit(0)).alias("n_rows"),
-                F.col("n_docs"),
-                F.current_timestamp().alias("completed_at"),
-                F.lit("done").alias("status"),
+            # co-locate each bucket into one task before partitionBy —
+            # otherwise every write task opens a file per bucket it sees (tasks
+            # × buckets small files; at 1000 executors that's a metadata storm)
+            out = out.repartition(n_buckets, "bucket")
+            # void each todo bucket's 'done' row BEFORE deleting its partition:
+            # without the pending row, a crash after the delete leaves the old
+            # 'done' row as the latest — and a later run whose input reverts to
+            # that fingerprint (restored snapshot, retried orchestration) would
+            # match it and skip the bucket whose data was deleted, silently
+            # serving a table missing those rows forever. One extra tiny append
+            # per run with todo work; the successful path's 'done' rows below
+            # supersede these by timestamp.
+            (
+                todo.select(
+                    "bucket",
+                    F.lit(None).cast("string").alias("input_fingerprint"),
+                    F.lit(0).cast("long").alias("n_rows"),
+                    "n_docs",
+                    F.current_timestamp().alias("completed_at"),
+                    F.lit("pending").alias("status"),
+                )
+                .write.mode("append")
+                .parquet(manifest_path)
             )
-        )
-        rows.write.mode("append").parquet(manifest_path)
-        _mark("manifest write")
-
-    if todo_buckets and n_skipped == 0:
-        aux = result  # full run: the write plan already covers every page
-    else:
-        # Partial resume (or all-skipped): the write plan covered only the
-        # recomputed buckets, but mentions/tokens are a logical view of the
-        # WHOLE input — rebuild them (lazily) over the full pages DataFrame
-        # so callers' metrics never silently cover a subset. The write
-        # plan's persisted hub is dead weight from here on: unpersist it so
-        # drivers looping run_checkpointed over many inputs don't
-        # accumulate orphaned cache entries.
-        if todo_buckets:
+            # clear every todo partition BEFORE the write: dynamic overwrite
+            # only replaces partitions PRESENT in the written data, so a todo
+            # bucket whose recompute yields ZERO triples would otherwise keep
+            # its stale files (and the read-back below would count them into
+            # the manifest). A crash between delete and the final manifest
+            # write leaves the 'pending' row latest → recomputed next run.
+            # Visibility tradeoff, accepted: a concurrent reader of the triples
+            # dir sees todo buckets ABSENT while the recompute runs (before, it
+            # saw their stale previous contents — and a mixed old/new table
+            # during the overwrite commit, which is no better). This table is
+            # job-owned during a run; serving readers across rewrites is a
+            # snapshot-table-format concern (write new snapshot dir, flip a
+            # pointer — what Iceberg does), not a bucket-overwrite one.
+            _delete_bucket_partitions(spark, triples_path, todo_buckets)
+            (
+                out.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("bucket")
+                .parquet(triples_path)
+            )
+            # manifest rows AFTER a successful write (crash before this line →
+            # bucket is simply recomputed next run; writes are idempotent).
+            # Schema-pinned read: a run whose todo buckets all produced zero
+            # triples leaves no data files to infer from.
+            written = _read_triples(
+                spark, triples_path, TRIPLES_TABLE_SCHEMA
+            ).filter(F.col("bucket").isin(todo_buckets))
+            rows = (
+                written.groupBy("bucket")
+                .agg(F.count(F.lit(1)).alias("n_rows"))
+                .join(
+                    todo.select("bucket", "input_fingerprint", "n_docs"),
+                    "bucket",
+                    "right",
+                )
+                .select(
+                    F.col("bucket"),
+                    F.col("input_fingerprint"),
+                    F.coalesce(F.col("n_rows"), F.lit(0)).alias("n_rows"),
+                    F.col("n_docs"),
+                    F.current_timestamp().alias("completed_at"),
+                    F.lit("done").alias("status"),
+                )
+            )
+            rows.write.mode("append").parquet(manifest_path)
+        finally:
             result.unpersist()
-        aux = build_triples(pages, alias_dict, tagger=tagger, model=model,
-                            vocab=vocab, use_extractor=use_extractor,
-                            eager_cache=False, ft_model=ft_model,
-                            cmap=cmap_shared)
-    if todo_buckets or manifest is not None:
-        from pyspark.sql import types as T
 
-        schema = (
-            out.schema if todo_buckets
-            else T.StructType(
-                aux.triples.schema.fields
-                + [T.StructField("bucket", T.IntegerType(), True)]
-            )
-        )
-        triples = _read_triples(spark, triples_path, schema)
-    else:
-        # empty input, no prior manifest: nothing was written, but the
-        # result schema must not depend on run history — callers that loop
-        # run_checkpointed and union results would hit AnalysisException
-        # when the first call returned 5 columns and later ones 6. Attach
-        # the same bucket column the written paths carry.
-        triples = aux.triples.withColumn(
-            "bucket", _bucket_col(n_buckets, "doc_id")
-        )
     return PipelineResult(
-        triples=triples,
-        mentions=aux.mentions,
-        tokens=aux.tokens,
+        triples=_read_triples(spark, triples_path, TRIPLES_TABLE_SCHEMA),
+        mentions=None,
+        tokens=None,
         n_buckets_processed=len(todo_buckets),
         n_buckets_skipped=int(n_skipped),
-        persisted=aux.persisted,
         bucket_lineage=tuple(
             (int(r["bucket"]), r["input_fingerprint"], int(r["n_docs"]))
             for r in fp_rows

@@ -305,9 +305,11 @@ def main(argv: list[str] | None = None) -> None:
                 checkpoint_dir=ckpt_dir,
             )
         finally:
-            import shutil
+            # through the Hadoop FS of the path, so HDFS/S3 dirs go too
+            from bioner_spark.pipeline import _hadoop_fs
 
-            shutil.rmtree(ckpt_dir, ignore_errors=True)
+            fs, jpath = _hadoop_fs(spark, ckpt_dir)
+            fs.delete(jpath, True)
         analytics_sec = round(time.time() - ta, 3)
 
     print(

@@ -330,3 +330,28 @@ def test_khop_min_hop_on_diamond(spark):
         for r in khop_neighbors(t, k=2, n_seeds=2).collect()
     }
     assert got == {"A": 0, "B": 0, "C": 1, "D": 1}
+
+
+def test_pagerank_failure_mid_iteration_releases_caches(spark, small, tmp_path, monkeypatch):
+    """A round that raises must not leave pagerank's projection, adjacency
+    or node caches persisted for the rest of the session. checkpoint_dir
+    makes each round a reliable checkpoint, which persists nothing, so any
+    new persistent RDD is a leak."""
+    import bioner_spark.kg_analytics as KA
+
+    real_truncate = KA._truncate
+    calls = []
+
+    def failing_second_round(df, checkpoint_dir):
+        calls.append(df)
+        if len(calls) == 2:  # the first round's new ranks
+            raise RuntimeError("round failed")
+        return real_truncate(df, checkpoint_dir)
+
+    monkeypatch.setattr(KA, "_truncate", failing_second_round)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    with pytest.raises(RuntimeError, match="round failed"):
+        KA.pagerank(small, iterations=3, checkpoint_dir=str(tmp_path / "ckpt"))
+    assert len(calls) == 2
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()

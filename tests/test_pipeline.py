@@ -4,11 +4,16 @@ BASELINE.json north_rule) + checkpointed-resume behavior."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from bioner_spark import corpus as corpus_mod
 from bioner_spark.metrics import entity_level_prf1
-from bioner_spark.pipeline import build_triples, run_checkpointed
+from bioner_spark.pipeline import (
+    TRIPLES_TABLE_SCHEMA,
+    build_triples,
+    run_checkpointed,
+)
 from bioner_spark.schemas import MENTIONS_SCHEMA
 from bioner_spark.triples import triple_prf1
 
@@ -438,3 +443,76 @@ def test_read_manifest_self_heals_first_append_crash_debris(spark, tmp_path):
     ).parquet(str(man))
     got = read_manifest(spark, str(man))
     assert got is not None and got.count() == 1
+
+
+def _persistent_rdd_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_run_checkpointed_leaves_no_cache(spark, corpus, tmp_path, monkeypatch):
+    """run_checkpointed releases the write plan's token cache itself: no
+    persistent RDD survives a fresh run, nor a run whose triples write
+    raises."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    pages = corpus_mod.pages_spark_df(spark, corpus)
+    alias = corpus_mod.alias_dict_spark_df(spark, corpus)
+    before = _persistent_rdd_ids(spark)
+
+    fresh = run_checkpointed(spark, pages, alias, str(tmp_path / "fresh"), n_buckets=4)
+    assert fresh.n_buckets_processed > 0
+    assert (fresh.mentions, fresh.tokens, fresh.persisted) == (None, None, ())
+    assert _persistent_rdd_ids(spark) - before == set()
+
+    real_parquet = DataFrameWriter.parquet
+
+    def failing_triples_write(self, path, *args, **kwargs):
+        if path.endswith("/triples"):
+            raise RuntimeError("triples write failed")
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_triples_write)
+    with pytest.raises(RuntimeError, match="triples write failed"):
+        run_checkpointed(spark, pages, alias, str(tmp_path / "failed"), n_buckets=4)
+    assert _persistent_rdd_ids(spark) - before == set()
+
+
+def test_all_skipped_resume_never_evaluates_alias_dict(spark, corpus, tmp_path):
+    """A resume with every bucket done runs no job over alias_dict: one that
+    raises whenever it is evaluated still resumes, with the same table."""
+    pages = corpus_mod.pages_spark_df(spark, corpus)
+    alias = corpus_mod.alias_dict_spark_df(spark, corpus)
+    out = str(tmp_path / "kg")
+    r1 = run_checkpointed(spark, pages, alias, out, n_buckets=4)
+
+    poisoned = alias.filter(F.raise_error(F.lit("alias_dict evaluated")).isNull())
+    with pytest.raises(Exception, match="alias_dict evaluated"):
+        poisoned.count()
+    r2 = run_checkpointed(spark, pages, poisoned, out, n_buckets=4)
+    assert (r2.n_buckets_processed, r2.n_buckets_skipped) == (0, r1.n_buckets_processed)
+    assert r2.triples.count() == r1.triples.count() > 0
+
+
+def test_run_checkpointed_schema_does_not_depend_on_run_history(spark, corpus, tmp_path):
+    """Fresh, partial-resume, all-skipped and empty-input runs return the
+    same triples schema, so callers can union results across runs."""
+    pages = corpus_mod.pages_spark_df(spark, corpus)
+    alias = corpus_mod.alias_dict_spark_df(spark, corpus)
+    out = str(tmp_path / "kg")
+    fresh = run_checkpointed(spark, pages, alias, out, n_buckets=4)
+    pages2 = pages.withColumn(
+        "url",
+        F.when(
+            F.col("url").endswith("/doc/0"), F.concat(F.col("url"), F.lit("x"))
+        ).otherwise(F.col("url")),
+    )
+    partial = run_checkpointed(spark, pages2, alias, out, n_buckets=4)
+    assert partial.n_buckets_processed > 0 and partial.n_buckets_skipped > 0
+    skipped = run_checkpointed(spark, pages2, alias, out, n_buckets=4)
+    assert skipped.n_buckets_processed == 0
+    empty = run_checkpointed(
+        spark, pages.limit(0), alias, str(tmp_path / "empty"), n_buckets=4
+    )
+    assert (empty.n_buckets_processed, empty.triples.count()) == (0, 0)
+    for r in (fresh, partial, skipped, empty):
+        assert r.triples.schema == TRIPLES_TABLE_SCHEMA
