@@ -41,6 +41,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from bioner_spark.session import local_frame
+
 #: reference ngram_encoder.py:15 — word2vec.c's MAX_CODE_LENGTH.
 MAX_CODE_LENGTH = 40
 
@@ -241,7 +243,7 @@ def _huffman_codes_inner(
     if v == 0:
         # schema-stable empty result (createDataFrame can't infer a schema
         # from an all-empty object-dtype pandas frame)
-        return spark.createDataFrame([], _OUT_SCHEMA)
+        return local_frame(spark, [], _OUT_SCHEMA)
     counts = pdf["count"].to_numpy(dtype=np.int64)
     if v > 1 and np.any(counts[:-1] < counts[1:]):
         raise ValueError("huffman_codes: vocab index must rank count descending")

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bioner_spark.session import local_frame
+
 
 # Below this many edges the graph is collected and solved with union-find on
 # the driver (one job, no iteration). The gate is count-only: an
@@ -87,9 +89,7 @@ def _driver_union_find(rows: list, spark, node_type: str) -> DataFrame:
                 ru, rv = rv, ru
             parent[rv] = ru
     out = sorted((n, find(n)) for n in parent)
-    return spark.createDataFrame(
-        out, schema=f"node {node_type}, component {node_type}"
-    )
+    return local_frame(spark, out, f"node {node_type}, component {node_type}")
 
 
 def _collect_if_small(df: DataFrame, max_rows: int) -> list | None:
@@ -361,7 +361,7 @@ def canonical_map(alias_dict: DataFrame, driver_threshold: int = 2_000_000) -> D
             "node", "canonical_id"
         )
         if any(cid is None for _, cid in rows):
-            out = out.union(spark.createDataFrame([(None, None)], out.schema))
+            out = out.union(local_frame(spark, [(None, None)], out.schema))
         return out
 
     from bioner_spark.linking import alias_edges

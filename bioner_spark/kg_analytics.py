@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bioner_spark.graph import _truncate
+from bioner_spark.session import local_frame
 
 
 def write_analytics(
@@ -368,9 +369,7 @@ def pagerank(
         held += [adj, nodes]
         n = nodes.count()  # bounded driver scalar: |V|
         if n == 0:
-            return triples.sparkSession.createDataFrame(
-                [], "entity string, rank double"
-            )
+            return local_frame(triples.sparkSession, [], "entity string, rank double")
         ranks = _truncate(
             nodes.select("entity", F.lit(1.0 / n).alias("rank")), checkpoint_dir
         )

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bioner_spark.session import local_frame
+
 SPAN_KEY = ["doc_id", "sentence_id", "start_tok", "end_tok"]
 
 
@@ -48,8 +50,8 @@ def exact_match_prf1(pred: DataFrame, gold: DataFrame, key: list[str]) -> DataFr
     precision = tp / n_pred if n_pred else 0.0
     recall = tp / n_gold if n_gold else 0.0
     f1 = 2 * precision * recall / (precision + recall + 1e-20)
-    spark = pred.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        pred.sparkSession,
         [(tp, n_pred, n_gold, float(precision), float(recall), float(f1))],
         "true_positives long, predicted long, gold long, precision double, recall double, f1 double",
     )

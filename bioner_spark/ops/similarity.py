@@ -22,6 +22,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from bioner_spark.session import local_frame
+
 ROUND_DIGITS = 6
 
 
@@ -509,7 +511,8 @@ def ivf_topk(
     if centroid_vecs is not None:
         if not centroid_vecs:
             raise ValueError("ivf_topk: centroid_vecs is empty")
-        cents = spark.createDataFrame(
+        cents = local_frame(
+            spark,
             [(i, [float(x) for x in v]) for i, v in enumerate(centroid_vecs)],
             "cent_id long, cent_vec array<double>",
         )

@@ -17,6 +17,14 @@ result converges to the same table. run_checkpointed returns that table
 read back from disk, with the processed/skipped bucket counts and the
 per-bucket lineage; it keeps no cache alive after it returns or raises.
 
+Driver-built frames (the todo/removed manifest rows, the empty table
+read-back) go through session.local_frame: an Arrow local relation that
+stays on the JVM. A list-built frame is a pickled Python RDD, so every
+scan of it forks Python workers — in a dict-tagger build the extract UDF
+should be the only Python that runs. Each manifest append (removed,
+pending, done) writes one file (coalesce(1)), not one per slice of its
+local relation, so a fresh run adds two files to the manifest.
+
 Skew handling: pages are repartitioned by hash(url) before the tokenize→tag
 stages — a few hosts owning ~30% of a crawl (corpus.py models this) spread
 evenly because the key is the full url, not the host; every keyed stage
@@ -37,6 +45,7 @@ from bioner_spark.extract import with_extracted_text
 from bioner_spark.graph import canonical_map
 from bioner_spark.linking import dict_mentions, dict_tag_tokens, link_mentions
 from bioner_spark.schemas import TRIPLES_SCHEMA
+from bioner_spark.session import local_frame
 from bioner_spark.spans import decode_spans
 from bioner_spark.tokenizer import tokenize
 from bioner_spark.triples import extract_triples
@@ -404,7 +413,7 @@ def _read_triples(spark: SparkSession, triples_path: str, schema) -> DataFrame:
     raise PATH_NOT_FOUND forever."""
     fs, jpath = _hadoop_fs(spark, triples_path)
     if not fs.exists(jpath):
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return spark.read.schema(schema).parquet(triples_path)
 
 
@@ -523,7 +532,7 @@ def run_checkpointed(
         # that: crash after delete, before record → stale 'done' row
         # survives with no data behind it.
         (
-            spark.createDataFrame([(b,) for b in orphans], "bucket int")
+            local_frame(spark, [(b,) for b in orphans], "bucket int")
             .select(
                 "bucket",
                 F.lit(None).cast("string").alias("input_fingerprint"),
@@ -532,6 +541,7 @@ def run_checkpointed(
                 F.current_timestamp().alias("completed_at"),
                 F.lit("removed").alias("status"),
             )
+            .coalesce(1)
             .write.mode("append")
             .parquet(manifest_path)
         )
@@ -543,7 +553,8 @@ def run_checkpointed(
     if todo_buckets:
         # only built when consumed (the pending append + the done-row join
         # below); todo_rows is non-empty here so no placeholder row needed
-        todo = spark.createDataFrame(
+        todo = local_frame(
+            spark,
             [(r["bucket"], r["input_fingerprint"], r["n_docs"]) for r in todo_rows],
             "bucket int, input_fingerprint string, n_docs long",
         )
@@ -585,6 +596,7 @@ def run_checkpointed(
                     F.current_timestamp().alias("completed_at"),
                     F.lit("pending").alias("status"),
                 )
+                .coalesce(1)
                 .write.mode("append")
                 .parquet(manifest_path)
             )
@@ -618,11 +630,7 @@ def run_checkpointed(
             rows = (
                 written.groupBy("bucket")
                 .agg(F.count(F.lit(1)).alias("n_rows"))
-                .join(
-                    todo.select("bucket", "input_fingerprint", "n_docs"),
-                    "bucket",
-                    "right",
-                )
+                .join(todo, "bucket", "right")
                 .select(
                     F.col("bucket"),
                     F.col("input_fingerprint"),
@@ -632,7 +640,7 @@ def run_checkpointed(
                     F.lit("done").alias("status"),
                 )
             )
-            rows.write.mode("append").parquet(manifest_path)
+            rows.coalesce(1).write.mode("append").parquet(manifest_path)
         finally:
             result.unpersist()
 

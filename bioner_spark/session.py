@@ -12,7 +12,38 @@ from __future__ import annotations
 import os
 import sys
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame of driver-side `rows` (tuples in `schema`'s field
+    order; `schema` a StructType or DDL string), built as an Arrow local
+    relation that plans as `LocalTableScan`.
+
+    Every small table the library builds on the driver goes through here.
+    `spark.createDataFrame(list, ddl)` would instead make a pickled Python
+    RDD (`Scan ExistingRDD`), and every scan of it forks Python workers
+    for each of its partitions — a fixed Python round-trip per job for
+    tables of a few rows, outside any vectorized UDF."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def _default_driver_memory() -> str:
+    """min(24g, half of physical RAM): the driver heap must fit the box."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (2 << 20)
+    return f"{min(24 << 10, half_mb)}m"
 
 
 def get_spark(
@@ -25,6 +56,8 @@ def get_spark(
 
     Parallelism is read from $SPARK_GRAFT_CPUS when not given so bench runs
     can sweep parallelism levels (the sandbox proxy for cluster size).
+    spark.driver.memory defaults to min(24g, half of physical RAM);
+    $SPARK_DRIVER_MEM or extra_conf override it.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
@@ -52,7 +85,10 @@ def get_spark(
         # sub-batching bounds output accumulation, not input.
         .config("spark.sql.execution.arrow.maxBytesPerBatch", str(64 << 20))
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Dio.netty.tryReflectionSetAccessible=true")
     )

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from bioner_spark import corpus as corpus_mod
 from bioner_spark.metrics import entity_level_prf1
@@ -516,3 +517,116 @@ def test_run_checkpointed_schema_does_not_depend_on_run_history(spark, corpus, t
     assert (empty.n_buckets_processed, empty.triples.count()) == (0, 0)
     for r in (fresh, partial, skipped, empty):
         assert r.triples.schema == TRIPLES_TABLE_SCHEMA
+
+
+def test_driver_built_frames_are_local_relations(spark, corpus, tmp_path, monkeypatch):
+    """Every frame run_checkpointed builds on the driver is an Arrow local
+    relation, never a pickled Python RDD built from a list: fresh,
+    orphan-dropping (n_buckets changed) and all-skipped runs pass with
+    list-built createDataFrame forbidden. Each manifest append is one file."""
+    from pyspark.sql import SparkSession
+
+    from bioner_spark.graph import _driver_union_find, canonical_map
+
+    pages = corpus_mod.pages_spark_df(spark, corpus)
+    alias = corpus_mod.alias_dict_spark_df(spark, corpus)
+    null_id_alias = spark.createDataFrame(
+        [("a", 1), ("a", 2), ("b", None)], "alias string, canonical_id bigint"
+    )
+    real_create = SparkSession.createDataFrame
+
+    def no_list_frames(self, data, *args, **kwargs):
+        if isinstance(data, list):
+            raise AssertionError("DataFrame built from a Python list")
+        return real_create(self, data, *args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", no_list_frames)
+    out = str(tmp_path / "kg")
+    fresh = run_checkpointed(spark, pages, alias, out, n_buckets=4)
+    assert fresh.n_buckets_processed == 4
+    manifest_files = sorted((tmp_path / "kg" / "manifest").glob("*.parquet"))
+    assert len(manifest_files) == 2, manifest_files
+    rebucketed = run_checkpointed(spark, pages, alias, out, n_buckets=2)
+    assert rebucketed.n_buckets_processed == 2
+    removed = spark.read.parquet(f"{out}/manifest").filter(F.col("status") == "removed")
+    assert sorted(r["bucket"] for r in removed.collect()) == [2, 3]
+    skipped = run_checkpointed(spark, pages, alias, out, n_buckets=2)
+    assert (skipped.n_buckets_processed, skipped.n_buckets_skipped) == (0, 2)
+
+    def physical_plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert "LocalTableScan" in physical_plan(
+        _driver_union_find([(1, 2), (3, 3)], spark, "bigint")
+    )
+    for components in (canonical_map(alias), canonical_map(null_id_alias)):
+        assert "ExistingRDD" not in physical_plan(components)
+
+
+def test_manifest_from_list_built_rows_still_resumes(spark, corpus, tmp_path):
+    """A manifest whose rows were appended from list-built frames (one file
+    per slice, as older runs wrote it) resumes: every bucket is skipped,
+    later appends mix with it, and the manifest schema stays put."""
+    import shutil
+
+    from bioner_spark.pipeline import bucket_fingerprints
+
+    pages = corpus_mod.pages_spark_df(spark, corpus)
+    alias = corpus_mod.alias_dict_spark_df(spark, corpus)
+    out = tmp_path / "kg"
+    manifest = str(out / "manifest")
+    fresh = run_checkpointed(spark, pages, alias, str(out), n_buckets=4)
+    shutil.rmtree(manifest)
+
+    todo = spark.createDataFrame(
+        [
+            (r["bucket"], r["input_fingerprint"], r["n_docs"])
+            for r in bucket_fingerprints(pages, 4).collect()
+        ],
+        "bucket int, input_fingerprint string, n_docs long",
+    )
+    todo.select(
+        "bucket",
+        F.lit(None).cast("string").alias("input_fingerprint"),
+        F.lit(0).cast("long").alias("n_rows"),
+        "n_docs",
+        F.current_timestamp().alias("completed_at"),
+        F.lit("pending").alias("status"),
+    ).write.mode("append").parquet(manifest)
+    (
+        spark.read.parquet(str(out / "triples"))
+        .groupBy("bucket")
+        .agg(F.count(F.lit(1)).alias("n_rows"))
+        .join(todo, "bucket", "right")
+        .select(
+            "bucket",
+            "input_fingerprint",
+            F.coalesce(F.col("n_rows"), F.lit(0)).alias("n_rows"),
+            "n_docs",
+            F.current_timestamp().alias("completed_at"),
+            F.lit("done").alias("status"),
+        )
+        .write.mode("append")
+        .parquet(manifest)
+    )
+    schema = T.StructType.fromDDL(
+        "bucket int, input_fingerprint string, n_rows bigint, n_docs bigint, "
+        "completed_at timestamp, status string"
+    )
+    assert spark.read.parquet(manifest).schema == schema
+
+    resumed = run_checkpointed(spark, pages, alias, str(out), n_buckets=4)
+    assert (resumed.n_buckets_processed, resumed.n_buckets_skipped) == (0, 4)
+    assert resumed.triples.count() == fresh.triples.count() > 0
+
+    pages2 = pages.withColumn(
+        "url",
+        F.when(
+            F.col("url").endswith("/doc/0"), F.concat(F.col("url"), F.lit("x"))
+        ).otherwise(F.col("url")),
+    )
+    partial = run_checkpointed(spark, pages2, alias, str(out), n_buckets=4)
+    assert 0 < partial.n_buckets_processed < 4
+    assert spark.read.parquet(manifest).schema == schema
+    again = run_checkpointed(spark, pages2, alias, str(out), n_buckets=4)
+    assert (again.n_buckets_processed, again.n_buckets_skipped) == (0, 4)
