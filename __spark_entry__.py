@@ -274,11 +274,17 @@ def _kg_linked(spark: SparkSession, sf_dir: str):
 # entry — flagship: end-to-end KG triple extraction on sf0.001
 # ---------------------------------------------------------------------------
 
-def entry(spark: SparkSession) -> DataFrame:
+def _kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The constructed KG: `kg_triples`, the input of every read-side
+    analytics query, and `entry` at sf0.001."""
     from bioner_spark.triples import extract_triples
 
-    linked, tagged = _kg_linked(spark, "/root/testdata/sf0.001")
+    linked, tagged = _kg_linked(spark, sf_dir)
     return extract_triples(linked, tagged, predicates=PREDICATES)
+
+
+def entry(spark: SparkSession) -> DataFrame:
+    return _kg_triples(spark, "/root/testdata/sf0.001")
 
 
 # ---------------------------------------------------------------------------
@@ -366,31 +372,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["huffman_codes"] = huffman_codes_q
 
     def multihot_indices(spark, sf_dir):
-        from bioner_spark.functions.ngrams import build_vocabulary, char_ngrams
+        from bioner_spark.functions.ngrams import (
+            build_vocabulary, encode_multihot_indices, is_unknown,
+        )
 
         toks = _tokens(spark, sf_dir)
         vocab = build_vocabulary(toks, min_word_frequency=10)
-        toks_d = toks.select(F.col("text").alias("token")).distinct()
-        grams = toks_d.select(
-            "token", F.explode_outer(char_ngrams(F.col("token"))).alias("ngram")
+        distinct = toks.select(F.col("text").alias("token")).distinct()
+        enc = is_unknown(
+            encode_multihot_indices(distinct, vocab, token_col="token"),
+            vocab, token_col="token",
         )
-        joined = grams.join(
-            F.broadcast(vocab.select("ngram", "index")), "ngram", "left"
-        )
-        agg = joined.groupBy("token").agg(
-            F.array_join(
-                F.array_sort(
-                    F.collect_set(F.when(F.col("index").isNotNull(), F.col("index")))
-                ),
-                ",",
-            ).alias("indices_csv"),
-            F.sum(F.when(F.col("ngram").isNotNull(), 1).otherwise(0)).alias("_n_all"),
-            F.sum(F.when(F.col("index").isNotNull(), 1).otherwise(0)).alias("_n_known"),
-        )
-        return agg.select(
+        return enc.select(
             "token",
-            "indices_csv",
-            (F.col("_n_known") < F.col("_n_all")).cast("int").alias("is_unknown"),
+            F.array_join("ngram_indices", ",").alias("indices_csv"),
+            F.col("is_unknown").cast("int").alias("is_unknown"),
         )
 
     q["multihot_indices"] = multihot_indices
@@ -639,22 +635,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["dict_mentions"] = dict_mentions
 
-    def kg_triples(spark, sf_dir):
-        from bioner_spark.triples import extract_triples
-
-        linked, tagged = _kg_linked(spark, sf_dir)
-        return extract_triples(linked, tagged, predicates=PREDICATES)
-
-    q["kg_triples"] = kg_triples
+    q["kg_triples"] = _kg_triples
 
     # --- KG read-side analytics (kg_analytics.py): queries a user runs
     # against the materialized triple table -------------------------------
-    def _triples_df(spark, sf_dir):
-        from bioner_spark.triples import extract_triples
-
-        linked, tagged = _kg_linked(spark, sf_dir)
-        return extract_triples(linked, tagged, predicates=PREDICATES)
-
     def kg_degree(spark, sf_dir):
         """Per-entity degree/support profile over the constructed KG
         (kg_analytics.entity_degree — per-metric distinct-then-count,
@@ -664,7 +648,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         executor blocks, not four re-executions of the gazetteer chain."""
         from bioner_spark.kg_analytics import entity_degree
 
-        return entity_degree(_triples_df(spark, sf_dir).localCheckpoint())
+        return entity_degree(_kg_triples(spark, sf_dir).localCheckpoint())
 
     q["kg_degree"] = kg_degree
 
@@ -674,7 +658,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         counts, never re-scan triples."""
         from bioner_spark.kg_analytics import cooccurrence_pmi
 
-        return cooccurrence_pmi(_triples_df(spark, sf_dir))
+        return cooccurrence_pmi(_kg_triples(spark, sf_dir))
 
     q["kg_pmi"] = kg_pmi
 
@@ -684,7 +668,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         oracle = the same power iteration unrolled as DuckDB CTEs."""
         from bioner_spark.kg_analytics import pagerank
 
-        return pagerank(_triples_df(spark, sf_dir), iterations=5)
+        return pagerank(_kg_triples(spark, sf_dir), iterations=5)
 
     q["kg_pagerank"] = kg_pagerank
 
@@ -696,7 +680,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         SUM(rank*w/od) op sequence."""
         from bioner_spark.kg_analytics import pagerank
 
-        return pagerank(_triples_df(spark, sf_dir), iterations=5, weighted=True)
+        return pagerank(_kg_triples(spark, sf_dir), iterations=5, weighted=True)
 
     q["kg_pagerank_weighted"] = kg_pagerank_weighted
 
@@ -707,7 +691,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         the whole visited set — equivalent under min-hop."""
         from bioner_spark.kg_analytics import khop_neighbors
 
-        return khop_neighbors(_triples_df(spark, sf_dir), k=3, n_seeds=5)
+        return khop_neighbors(_kg_triples(spark, sf_dir), k=3, n_seeds=5)
 
     q["kg_khop"] = kg_khop
 
@@ -735,7 +719,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # kg_diff itself reads each snapshot twice (distinct + anti-join) —
         # without materialization that would re-execute the full gazetteer
         # pipeline ~8x; blocks are freed when the driver-side frame is GC'd
-        t = _triples_df(spark, sf_dir).localCheckpoint()
+        t = _kg_triples(spark, sf_dir).localCheckpoint()
         snap_a = t.where((F.col("doc_id") % 2 == 0) & (F.col("doc_id") < 30))
         snap_b = t.where((F.col("doc_id") % 2 == 1) & (F.col("doc_id") < 30))
         d = kg_diff(snap_a, snap_b)

@@ -1,7 +1,7 @@
 """Headline benchmark for the PySpark KG-construction engine.
 
 Runs at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS, default the usable cores] and prints ONE JSON line:
   {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Headliners (chosen to exercise every heavy path of the engine):
@@ -49,8 +49,8 @@ def sf_from_dir(sf_dir: str) -> float:
 
 
 def _spin(n: int) -> int:
-    # register-only LCG spin — scaling_bench.py's probe kernel, inlined so
-    # bench.py stays dependency-free when copied out of the repo
+    # register-only LCG spin, inlined so bench.py's probe stays
+    # dependency-free when copied out of the repo
     x = 0
     for _ in range(n):
         x = (x * 1103515245 + 12345) & 0xFFFFFFFF
@@ -64,20 +64,23 @@ def box_probe() -> dict:
     "Cross-round calibration caveat"; one session measured the SAME code
     at 24.3-109.0 s while the 1-proc spin held within 3%) — a total
     without its probe numbers is unattributable. `spin_1p_sec` calibrates
-    per-core speed; `spin_eff_1to8` (fixed work per process, 1 vs 8
-    procs → t1/t8) calibrates multi-core contention, which tracks the
-    DRAM-bandwidth degradation that inflates shuffle-heavy queries."""
+    per-core speed; `spin_eff` (fixed work per process, 1 vs `spin_procs`
+    = the usable cores → t1/tN) calibrates multi-core contention, which
+    tracks the DRAM-bandwidth degradation that inflates shuffle-heavy
+    queries. More processes than cores would read as contention that is
+    only time-slicing."""
     import multiprocessing as mp
 
     per = 30_000_000
+    procs = len(os.sched_getaffinity(0))
     t0 = time.time()
     _spin(per)
     t1 = time.time() - t0
     t0 = time.time()
-    with mp.Pool(8) as p:
-        p.map(_spin, [per] * 8)
-    t8 = time.time() - t0
-    return {"spin_1p_sec": round(t1, 2), "spin_eff_1to8": round(t1 / t8, 3)}
+    with mp.Pool(procs) as p:
+        p.map(_spin, [per] * procs)
+    tn = time.time() - t0
+    return {"spin_1p_sec": round(t1, 2), "spin_procs": procs, "spin_eff": round(t1 / tn, 3)}
 
 
 def main() -> None:
@@ -90,7 +93,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from bioner_spark.corpus import alias_dict_spark_df, generate, pages_spark_df
-    from bioner_spark.session import get_spark
+    from bioner_spark.session import get_spark, usable_cpus
 
     spark = get_spark(app_name="bioner_bench")
 
@@ -254,7 +257,7 @@ def main() -> None:
                 "extra": {
                     "n_synth_docs": n_pages,
                     "kg_docs_per_sec": round(n_pages / timings["kg_pipeline"], 2),
-                    "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+                    "cpus": usable_cpus(),
                     "corpus_filter_sec": corpus_filter_sec,
                     "kg_analytics_sec": kg_analytics_sec,
                     "passes": passes,

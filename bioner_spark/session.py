@@ -1,10 +1,20 @@
-"""SparkSession factory tuned for this engine.
+"""SparkSession factory tuned for this engine: the only place a session is
+built, for a plain `python` driver and for a spark-submit payload alike.
 
-Local-mode defaults target the sandbox (local[32], single JVM). On a real
-cluster the same builder is used via spark-submit --py-files; only
-master/memory change. Shuffle-partition count and AQE are set explicitly
-because the KG pipeline's big shuffles (token explode → span agg, mention
-self-join) are sized by these.
+* Plain `python` driver (tests, bench.py, kgbench, the verify scripts):
+  local[$SPARK_GRAFT_CPUS], defaulting to the cores this process may run
+  on; shuffle partitions and default parallelism max(cores, 8); driver
+  memory min(24g, half of RAM).
+* Driver started by `spark-submit --py-files` (scripts/kg_job.py,
+  train_job.py, analytics_job.py; on a cluster or local-cluster[N,1,m]):
+  the JVM already runs with the submit command's conf, so master, driver
+  memory and both parallelism keys are left to that command.
+
+Either way the engine defaults (AQE, Arrow batch bounds, UTC, UI off) fill
+every key the launcher did not set, and the ICU warm-up runs once per
+context. Shuffle-partition count and AQE are set explicitly because the KG
+pipeline's big shuffles (token explode → span agg, mention self-join) are
+sized by these.
 """
 
 from __future__ import annotations
@@ -40,10 +50,54 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     return spark.createDataFrame(table, schema)
 
 
-def _default_driver_memory() -> str:
-    """min(24g, half of physical RAM): the driver heap must fit the box."""
+def usable_cpus() -> int:
+    """$SPARK_GRAFT_CPUS, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def memory_share_mb(jvms: int = 1) -> int:
+    """Heap for each of `jvms` JVMs sharing this box: min(24g, half of
+    physical RAM / jvms). One JVM is the default driver memory; a
+    local-cluster run splits the same half over its driver and executors."""
     half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (2 << 20)
-    return f"{min(24 << 10, half_mb)}m"
+    return min(24 << 10, half_mb // jvms)
+
+
+# Engine defaults, applied to every key the launcher did not set.
+_ENGINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Bound Arrow batches so giant documents cannot blow up one UDF call;
+    # the NER kernel additionally sub-batches by token budget.
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
+    # THE input-side byte bound for pandas UDF / mapInPandas batches
+    # (Spark >=4.0): a batch closes at 64 MB even if far under the row
+    # cap, so a handful of 32 MB video payloads can never arrive as one
+    # multi-GB pandas frame. Pinned to the default explicitly because
+    # ops/multimodal's memory contract DEPENDS on it — its own
+    # sub-batching bounds output accumulation, not input.
+    "spark.sql.execution.arrow.maxBytesPerBatch": str(64 << 20),
+    "spark.sql.session.timeZone": "UTC",
+    "spark.ui.enabled": "false",
+}
+
+
+def _submitted_conf():
+    """The conf spark-submit started this driver's JVM with, or None in a
+    plain `python` driver.
+
+    spark-submit launches the JVM first, passes its port in
+    $PYSPARK_GATEWAY_PORT and sets the submit command's keys as JVM system
+    properties, which `SparkConf()` reads. A plain driver must not touch
+    the JVM here: driver memory and -X options only take effect when the
+    builder launches it."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return None
+    from pyspark import SparkConf
+
+    return SparkConf()
 
 
 def get_spark(
@@ -54,47 +108,41 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    Parallelism is read from $SPARK_GRAFT_CPUS when not given so bench runs
-    can sweep parallelism levels (the sandbox proxy for cluster size).
-    spark.driver.memory defaults to min(24g, half of physical RAM);
-    $SPARK_DRIVER_MEM or extra_conf override it.
+    In a plain driver, parallelism is read from $SPARK_GRAFT_CPUS (default:
+    the usable cores) when not given, so bench runs can sweep parallelism
+    levels, and spark.driver.memory defaults to min(24g, half of physical
+    RAM); $SPARK_DRIVER_MEM overrides it. Under spark-submit the submit
+    command owns master, driver memory and parallelism, and the app name
+    and engine defaults apply only where it set nothing. Explicit
+    arguments and `extra_conf` apply in both.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    master = master or f"local[{cpus}]"
-    # Size shuffles to the core count: at 100 TB this would instead be
-    # ~2-3x total executor cores, set per job; AQE coalesces the tail.
-    shuffle_partitions = shuffle_partitions or max(cpus, 8)
-
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.default.parallelism", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Bound Arrow batches so giant documents cannot blow up one UDF call;
-        # the NER kernel additionally sub-batches by token budget.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        # THE input-side byte bound for pandas UDF / mapInPandas batches
-        # (Spark >=4.0): a batch closes at 64 MB even if far under the row
-        # cap, so a handful of 32 MB video payloads can never arrive as one
-        # multi-GB pandas frame. Pinned to the default explicitly because
-        # ops/multimodal's memory contract DEPENDS on it — its own
-        # sub-batching bounds output accumulation, not input.
-        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(64 << 20))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
-        )
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.extraJavaOptions", "-Dio.netty.tryReflectionSetAccessible=true")
-    )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    conf = {"spark.app.name": app_name, **_ENGINE_CONF}
+    submitted = _submitted_conf()
+    if submitted is not None:
+        conf = {k: v for k, v in conf.items() if not submitted.contains(k)}
+    else:
+        cpus = usable_cpus()
+        # Size shuffles to the core count: at 100 TB this would instead be
+        # ~2-3x total executor cores, set per job; AQE coalesces the tail.
+        parts = str(max(cpus, 8))
+        conf.update({
+            "spark.master": f"local[{cpus}]",
+            "spark.sql.shuffle.partitions": parts,
+            "spark.default.parallelism": parts,
+            "spark.driver.memory": (
+                os.environ.get("SPARK_DRIVER_MEM") or f"{memory_share_mb()}m"
+            ),
+            "spark.driver.extraJavaOptions": "-Dio.netty.tryReflectionSetAccessible=true",
+        })
+    if master:
+        conf["spark.master"] = master
+    if shuffle_partitions:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+        conf["spark.default.parallelism"] = str(shuffle_partitions)
+    conf.update(extra_conf or {})
+    builder = SparkSession.builder
+    for k, v in conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     _warm_icu(spark)

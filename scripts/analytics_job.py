@@ -2,13 +2,12 @@
 materialized triples table; prints one JSON metrics line.
 
 The analytics-side analogue of scripts/kg_job.py for the two-parallelism
-scaling evidence: reads a Parquet triples table (the 50k-entity / 2M-triple
-skewed graph from scripts/verify_kg_scale.py by default) and runs
+scaling evidence: reads a Parquet triples table (the skewed graph from
+scripts/verify_kg_scale.py's generator) and runs
 kg_analytics.write_analytics — degree + PMI + 5-iteration PageRank +
 3-hop BFS, all four written as Parquet — exactly the `kg_job
---analytics-dir` workload. Submitted by scripts/analytics_scaling.py at
-N and 4N single-core executor JVMs; wall = min over --trials runs (same
-min-under-one-sided-noise policy as every harness in this repo).
+--analytics-dir` workload. Submitted by `scripts/scaling_bench.py
+--workload analytics` at N and 4N single-core executor JVMs.
 """
 
 from __future__ import annotations
@@ -23,37 +22,26 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--triples", required=True)
     ap.add_argument("--out", required=True)
-    ap.add_argument("--trials", type=int, default=2)
     ap.add_argument("--pagerank-iterations", type=int, default=5)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from bioner_spark.kg_analytics import write_analytics
+    from bioner_spark.session import get_spark
 
-    spark = SparkSession.builder.appName("analytics_scaling").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark(app_name="bioner_analytics_job")
     triples = spark.read.parquet(args.triples)
     n_triples = triples.count()  # materialize the scan metadata pre-timing
 
-    walls = []
-    for t in range(args.trials):
-        out = f"{args.out.rstrip('/')}/trial{t}"
-        shutil.rmtree(out, ignore_errors=True)
-        t0 = time.time()
-        write_analytics(
-            triples, out, pagerank_iterations=args.pagerank_iterations
-        )
-        walls.append(round(time.time() - t0, 3))
-    best = min(walls)
+    shutil.rmtree(args.out, ignore_errors=True)
+    t0 = time.time()
+    write_analytics(triples, args.out, pagerank_iterations=args.pagerank_iterations)
+    wall = time.time() - t0
     print(
         json.dumps(
             {
                 "n_triples": n_triples,
-                "analytics_sec": best,
-                "triples_per_sec": round(n_triples / best, 1),
-                "trials": walls,
-                "executors": spark.sparkContext.defaultParallelism,
+                "analytics_sec": round(wall, 3),
+                "triples_per_sec": round(n_triples / wall, 1),
             }
         )
     )

@@ -1,11 +1,11 @@
 """Per-query jitter bands for bench.py (round-3 verdict item 5).
 
-Runs bench.py N times (fresh Spark JVM each run, like the driver does),
-plus the scaling_bench CPU spin probe once, and prints a single JSON line:
-per-query min/median/max across runs, the total band, and the probe — so a
-cross-round per-query comparison can be pinned to (a) the query's own
-same-code band and (b) the box's per-core speed that session, instead of a
-single-point wall.
+Runs bench.py N times (fresh Spark JVM each run, like the driver does) and
+prints a single JSON line: per-query min/median/max across runs, the total
+band, and each run's own box probe (bench.box_probe, taken just before that
+run's JVM starts) — so a cross-round per-query comparison can be pinned to
+(a) the query's own same-code band and (b) the box's per-core speed and
+contention during those runs, instead of a single-point wall.
 
 Usage: python scripts/bench_bands.py [--trials 5] [--sf-dir /root/testdata/sf0.1]
 """
@@ -40,9 +40,6 @@ def main() -> None:
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     args = ap.parse_args()
 
-    from scaling_bench import cpu_probe  # noqa: E402
-
-    probe = cpu_probe()
     runs = [one_run(args.sf_dir) for _ in range(args.trials)]
     per_query: dict[str, list[float]] = {}
     totals: list[float] = []
@@ -76,7 +73,10 @@ def main() -> None:
                     "max": round(max(totals), 3),
                 },
                 "queries": bands,
-                "cpu_probe": probe,
+                "probes": [
+                    {k: r["extra"][k] for k in ("spin_1p_sec", "spin_procs", "spin_eff")}
+                    for r in runs
+                ],
             }
         )
     )

@@ -19,9 +19,10 @@ connected-components → triples with checkpointed per-bucket resume
 `pipeline_sec` excludes session startup and input materialization — it is the
 number scripts/scaling_bench.py compares across parallelism levels.
 
-Session config: when launched via spark-submit, master/memory/shuffle come
-from the submit command line; this script only fills in engine defaults that
-were not set (AQE, Arrow batch size) so the same file works standalone too.
+Session: `session.get_spark`, which under spark-submit leaves master,
+memory and parallelism to the submit command and fills in only the engine
+defaults it did not set (AQE, Arrow batch size, ICU warm-up), so the same
+file works standalone too.
 """
 
 from __future__ import annotations
@@ -31,29 +32,7 @@ import json
 import sys
 import time
 
-from pyspark.sql import SparkSession
-
-
-def build_session(app_name: str = "bioner_kg_job") -> SparkSession:
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-    )
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    from bioner_spark.session import _warm_icu
-
-    # pay the per-executor ICU collation class-init (10-18 s, serializes all
-    # concurrent tasks in a JVM) before the timed pipeline, as a real
-    # long-running cluster job effectively does
-    _warm_icu(spark)
-    return spark
+from bioner_spark.session import get_spark, stable_default_parallelism
 
 
 def _config_token(args, alias) -> str:
@@ -134,7 +113,7 @@ def main(argv: list[str] | None = None) -> None:
                          "BENCH.md discloses when this is used")
     args = ap.parse_args(argv)
 
-    spark = build_session()
+    spark = get_spark(app_name="bioner_kg_job")
 
     pages = spark.read.parquet(args.input)
     alias = spark.read.parquet(args.alias)
@@ -151,8 +130,6 @@ def main(argv: list[str] | None = None) -> None:
     # still see a fraction of the fleet — undersizing the shuffle floor
     # and misreporting `cores` in the metrics JSON (train_job hit exactly
     # this; the shared poll lives in session.stable_default_parallelism)
-    from bioner_spark.session import stable_default_parallelism
-
     cores = stable_default_parallelism(spark)
     # neural: the hot stages are Arrow->numpy python workers (BiLSTM forward)
     # and the per-sentence encode aggregate — finer tasks amortize stragglers

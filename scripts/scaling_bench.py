@@ -1,39 +1,35 @@
-"""Two-parallelism scaling benchmark (the sandbox proxy for N vs 4N executors).
+"""N→4N scaling harness: one spark-submit payload at two executor counts.
 
 BASELINE.json north_rule requires ≥0.8 throughput scaling efficiency between
-cluster sizes N and 4N executors. No real cluster exists in this sandbox, so
-(per the driver instruction) we run the SAME spark-submit job on the SAME
-input at two executor counts — local-cluster[N,1,m] vs local-cluster[4N,1,m]
-single-core executor JVMs — and report throughput at both plus
-efficiency = (docs_per_sec_4N / docs_per_sec_N) / 4.
+cluster sizes N and 4N executors. On one box the stand-in is the SAME
+`spark-submit --py-files` job on the SAME input at local-cluster[N,1,m] and
+local-cluster[4N,1,m]: N separate single-core executor JVMs, each with its
+own heap and GC and a real shuffle between processes. (local[N] threads
+share one heap; measured, that mode's allocator/GC contention inverts
+scaling for object-heavy stages.) The harness reports throughput at both
+levels and efficiency = (throughput_4N / throughput_N) / (4N / N).
 
-The argparse default pair is 2→8 (matching BENCH.md's recorded E-series);
-the HEADLINE pair in BENCH.md is 1→4 with --trials (min wall), because this
-VM's vCPU scheduling is jittery beyond ~4 concurrent heavy processes
-(BENCH.md) — 1→4 is the widest factor-4 pair the box measures cleanly. Pass
---cores explicitly and read the generated section's header, which names the
-actual measured pair.
+Workloads (--workload): payload script, input, throughput key.
+
+  kg         scripts/kg_job.py --tagger dict   synthetic web pages   docs_per_sec
+  neural     scripts/kg_job.py --tagger neural synthetic web pages   docs_per_sec
+  train      scripts/train_job.py              synthetic sentences   train_sentences_per_sec
+  analytics  scripts/analytics_job.py          skewed triples table  triples_per_sec
 
 Usage:
-    python scripts/scaling_bench.py [--n-docs 200000] [--cores 2 8] [--update-md]
+    python scripts/scaling_bench.py --workload kg --n-docs 4000 --cores 1 4
+    python scripts/scaling_bench.py --workload neural --n-docs 1000
+    python scripts/scaling_bench.py --workload train --n-sentences 4096
+    python scripts/scaling_bench.py --workload analytics --n-edges 2000000
 
-Why 2→8 executors and not 8→32: this VM advertises 32 vCPUs but a pure-CPU
-multiprocessing probe (recorded in BENCH.md) shows the hardware itself only
-sustains ~0.8 per-worker throughput beyond 8 workers (vCPU overcommit /
-shared memory bandwidth) — a 4N=32 comparison measures the virtualization
-ceiling, not the engine. 2→8 single-core executors sits inside the machine's
-honest capacity; on a real cluster the same spark-submit runs at N and 4N
-executors unchanged.
-
-Steps:
-  1. generate the deterministic synthetic corpus once; write pages + alias
-     Parquet under /tmp/bioner_scaling/input
-  2. zip bioner_spark/ for --py-files
-  3. for each parallelism level: spark-submit --master local[N]
-     --py-files bioner_spark.zip scripts/kg_job.py (fresh output dir, so
-     resume never skips) and parse its JSON metrics line
-  4. print one JSON summary; with --update-md, rewrite the "Measured"
-     section of BENCH.md
+Memory fits the box: the driver and every executor at the larger level get
+the same heap, min(24g, half of physical RAM / (4N + 1)), the rule
+`session.get_spark` uses for its default driver memory, and the smaller
+level reuses it. Each level reports its best (highest-throughput) of
+--trials runs: this VM's vCPU scheduling is jittery (the same 8-executor
+job measured 187 s and 307 s back to back), and jitter only ever slows a
+run. Inputs are generated once per size under $SPARK_GRAFT_SCALING_DIR
+(default /tmp/bioner_scaling); one JSON summary goes to stdout.
 """
 
 from __future__ import annotations
@@ -48,11 +44,10 @@ import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORK = os.environ.get("SPARK_GRAFT_SCALING_DIR", "/tmp/bioner_scaling")
-EXEC_MEM_MB = int(os.environ.get("SPARK_GRAFT_EXEC_MEM_MB", "12288"))
+sys.path.insert(0, REPO)
 
 
-def prepare_input(n_docs: int) -> tuple[str, str]:
-    sys.path.insert(0, REPO)
+def prepare_pages(n_docs: int) -> tuple[str, str]:
     from bioner_spark.corpus import alias_dict_spark_df, generate, pages_spark_df
     from bioner_spark.session import get_spark
 
@@ -69,9 +64,27 @@ def prepare_input(n_docs: int) -> tuple[str, str]:
                       with_gold=False)
     pages_spark_df(spark, corpus).repartition(32).write.mode("overwrite").parquet(pages_path)
     alias_dict_spark_df(spark, corpus).coalesce(1).write.mode("overwrite").parquet(alias_path)
+    # end the JVM too (it exits when its stdin closes): its heap must not
+    # sit next to the payloads' JVMs for the rest of the run
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
     spark.stop()
+    gateway.proc.stdin.close()
+    gateway.proc.wait(timeout=60)
+    SparkContext._gateway = SparkContext._jvm = None
     open(stamp, "w").close()
     return pages_path, alias_path
+
+
+def prepare_triples(n_ent: int, n_edges: int) -> str:
+    from scripts.verify_kg_scale import SEED, gen_triples
+
+    os.makedirs(f"{WORK}/triples", exist_ok=True)
+    path = f"{WORK}/triples/triples_{n_ent}x{n_edges}_s{SEED}.parquet"
+    if not os.path.exists(path):
+        gen_triples(path, n_ent=n_ent, n_edges=n_edges, seed=SEED)
+    return path
 
 
 def make_zip() -> str:
@@ -89,9 +102,7 @@ def make_zip() -> str:
 
 def parse_metrics_line(proc, marker: str, context: str) -> dict:
     """Find the one JSON metrics line containing `marker` in a completed
-    subprocess's stdout — THE shared parser for scaling_bench /
-    train_scaling / bench_bands (three hand-rolled copies had already
-    drifted in error-tail size)."""
+    subprocess's stdout (shared with scripts/bench_bands.py)."""
     for line in proc.stdout.splitlines():
         line = line.strip()
         if line.startswith("{") and marker in line:
@@ -103,274 +114,132 @@ def parse_metrics_line(proc, marker: str, context: str) -> dict:
     )
 
 
-def base_submit_cmd(n_exec: int) -> list[str]:
-    """Shared spark-submit scaffolding for BOTH scaling harnesses (this one
-    and train_scaling.py — one copy, so a harness fix like the BLAS pinning
-    can never silently apply to one benchmark and not the other).
+def payload(args) -> tuple[str, list[str], str, list[str]]:
+    """The workload's payload script, its arguments (with `{out}` and
+    `{n}` filled per run), its throughput key and its extra spark conf.
+    Prepares the input once."""
+    if args.workload in ("kg", "neural"):
+        pages, alias = prepare_pages(args.n_docs)
+        argv = ["--input", pages, "--alias", alias, "--output", "{out}",
+                "--n-buckets", "32",
+                "--tagger", "dict" if args.workload == "kg" else "neural"]
+        if args.shuffle_partitions:
+            argv += ["--shuffle-partitions", str(args.shuffle_partitions)]
+        if args.pilot_docs:
+            argv += ["--pilot-docs", str(args.pilot_docs)]
+        return "kg_job.py", argv, "docs_per_sec", []
+    if args.workload == "train":
+        argv = ["--n-sentences", str(args.n_sentences), "--batch", str(args.batch),
+                "--epochs", str(args.epochs), "--n-shards", "{n}"]
+        if args.batch_norm:
+            argv.append("--batch-norm")
+        return "train_job.py", argv, "train_sentences_per_sec", []
+    triples = prepare_triples(args.n_ent, args.n_edges)
+    # 96 shuffle partitions at both levels unless given: the fixed-cost
+    # amortization kg_job's own default gives the pipeline (a
+    # core-count-sized shuffle under-splits the smaller level)
+    conf = [f"spark.sql.shuffle.partitions={args.shuffle_partitions or 96}"]
+    return "analytics_job.py", ["--triples", triples, "--out", "{out}"], "triples_per_sec", conf
 
-    Pin numpy/BLAS threads to the executor's core count (1): OpenBLAS
-    defaults to ALL machine threads inside every Python worker, so an
-    unpinned low-executor level silently uses more cores than it is
-    credited with and the N→4N comparison is between different effective
-    core counts (found via train_scaling.py: 0.416 → honest after pinning,
-    BOTH levels faster). Standard real-cluster config for 1-core executors.
-    """
+
+# numpy/BLAS threads pinned to each executor's one core: OpenBLAS defaults
+# to ALL machine threads inside every Python worker, so an unpinned
+# low-executor level silently uses more cores than it is credited with
+# (measured on the training payload: 0.416 before pinning, both levels
+# faster after)
+BLAS_CONF = [
+    f"spark.executorEnv.{var}=1"
+    for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS",
+                "VECLIB_MAXIMUM_THREADS", "NUMEXPR_NUM_THREADS")
+]
+
+
+def run_level(n_exec: int, mem_mb: int, conf: list[str], job: list[str],
+              key: str, trials: int) -> dict:
+    """The best of `trials` spark-submits of `job` at `n_exec` single-core
+    executor JVMs of `mem_mb` each, driver included. Shuffle/spill dirs go
+    to tmpfs — concurrent executors saturated this VM's /tmp disk, which
+    would measure the disk, not the engine; a real cluster has per-node
+    NVMe."""
     shm_dir = "/dev/shm/spark-local"
     os.makedirs(shm_dir, exist_ok=True)
-    return [
+    cmd = [
         "spark-submit",
-        "--master", f"local-cluster[{n_exec},1,{EXEC_MEM_MB}]",
-        "--driver-memory", "8g",
-        "--conf", f"spark.local.dir={shm_dir}",
-        "--conf", "spark.executorEnv.OMP_NUM_THREADS=1",
-        "--conf", "spark.executorEnv.OPENBLAS_NUM_THREADS=1",
-        "--conf", "spark.executorEnv.MKL_NUM_THREADS=1",
-        "--conf", "spark.executorEnv.VECLIB_MAXIMUM_THREADS=1",
-        "--conf", "spark.executorEnv.NUMEXPR_NUM_THREADS=1",
+        "--master", f"local-cluster[{n_exec},1,{mem_mb}]",
+        "--driver-memory", f"{mem_mb}m",
+        "--executor-memory", f"{mem_mb}m",
     ]
-
-
-def run_level(n_exec: int, pages: str, alias: str, zpath: str, tagger: str = "dict",
-              extra_conf: list[str] | None = None, event_log_dir: str | None = None,
-              shuffle_partitions: int | None = None, pilot_docs: int = 0) -> dict:
-    """One spark-submit at `n_exec` single-core executor JVMs.
-
-    local-cluster[N,1,mem] spawns N separate executor processes — the honest
-    single-box model of "N executors": per-executor heaps and GC, real
-    shuffle between processes. (local[N] threads share one heap; measured,
-    that mode's allocator/GC contention inverts scaling for object-heavy
-    stages.) Shuffle/spill dirs go to tmpfs — this VM's /tmp disk saturates
-    under concurrent executors, which would measure the disk, not the
-    engine; a real cluster has per-node NVMe.
-    """
-    out_dir = f"{WORK}/out_{n_exec}"
-    shutil.rmtree(out_dir, ignore_errors=True)
-    cmd = base_submit_cmd(n_exec)
-    if event_log_dir:
-        os.makedirs(event_log_dir, exist_ok=True)
-        cmd += ["--conf", "spark.eventLog.enabled=true",
-                "--conf", f"spark.eventLog.dir=file://{event_log_dir}"]
-    for kv in extra_conf or []:
+    for kv in [f"spark.local.dir={shm_dir}", *BLAS_CONF, *conf]:
         cmd += ["--conf", kv]
-    cmd += [
-        "--py-files", zpath,
-        os.path.join(REPO, "scripts/kg_job.py"),
-        "--input", pages,
-        "--alias", alias,
-        "--output", out_dir,
-        "--n-buckets", "32",
-        "--tagger", tagger,
-    ]
-    if shuffle_partitions:
-        cmd += ["--shuffle-partitions", str(shuffle_partitions)]
-    if pilot_docs:
-        cmd += ["--pilot-docs", str(pilot_docs)]
-    proc = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO, timeout=3600)
-    return parse_metrics_line(
-        proc, '"docs_per_sec"', f"spark-submit local-cluster[{n_exec},1,...]"
-    )
-
-
-def run_level_best(n_exec: int, pages: str, alias: str, zpath: str,
-                   tagger: str = "dict", trials: int = 1,
-                   extra_conf: list[str] | None = None,
-                   event_log_dir: str | None = None,
-                   shuffle_partitions: int | None = None,
-                   pilot_docs: int = 0) -> dict:
-    """Best (min-wall) of `trials` runs. This VM's vCPU scheduling is
-    jittery — the same 8-executor job measured 187 s and 307 s back to back
-    with zero configuration change. The minimum is the machine's honest
-    capability at that parallelism (the same policy scripts/membw_probe.py
-    uses); jitter hits both levels alike and is not an engine property."""
-    runs = [
-        run_level(n_exec, pages, alias, zpath, tagger, extra_conf=extra_conf,
-                  event_log_dir=event_log_dir,
-                  shuffle_partitions=shuffle_partitions, pilot_docs=pilot_docs)
-        for _ in range(trials)
-    ]
-    best = min(runs, key=lambda r: r["pipeline_sec"])
-    best["trials"] = [r["pipeline_sec"] for r in runs]
+    out = f"{WORK}/out_{n_exec}"
+    cmd += [a.format(out=out, n=n_exec) for a in job]
+    runs = []
+    for _ in range(trials):
+        # a fresh output dir per run, so kg_job's resume never skips
+        shutil.rmtree(out, ignore_errors=True)
+        proc = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO, timeout=3600)
+        runs.append(parse_metrics_line(
+            proc, f'"{key}"', f"local-cluster[{n_exec},1,{mem_mb}]"))
+    best = max(runs, key=lambda r: r[key])
+    best["trials"] = [r[key] for r in runs]
+    best["executors"] = n_exec
     return best
 
 
-def cpu_probe() -> dict:
-    """Pure-CPU multiprocessing scaling probe — quantifies what the VM's
-    vCPUs can actually deliver, independent of Spark."""
-    import multiprocessing as mp
-    import time
-
-    def bench(procs: int, per: int) -> float:
-        t = time.time()
-        with mp.Pool(procs) as p:
-            p.map(_spin, [per] * procs)
-        return time.time() - t
-
-    per = 30_000_000
-    t1, t8, t32 = bench(1, per), bench(8, per), bench(32, per)
-    # fixed work PER process → throughput_c = c/t_c → efficiency c→4c
-    # reduces to t_c / t_4c
-    return {
-        "t_1proc": round(t1, 2),
-        "t_8proc": round(t8, 2),
-        "t_32proc": round(t32, 2),
-        "hw_eff_1to8": round(t1 / t8, 3),  # per-worker slowdown going 1→8
-        "hw_eff_8to32": round(t8 / t32, 3),
-    }
-
-
-def _spin(n: int) -> int:
-    x = 0
-    for _ in range(n):
-        x = (x * 1103515245 + 12345) & 0xFFFFFFFF
-    return x
-
-
-AUTO_BEGIN = "<!-- SCALING-BENCH-AUTO-BEGIN -->"
-AUTO_END = "<!-- SCALING-BENCH-AUTO-END -->"
-
-
-def update_md(summary: dict) -> None:
-    """Splice the measured section into BENCH.md between the AUTO markers;
-    if the markers are absent, APPEND the section. NEVER truncates the
-    hand-curated evidence document (an earlier version opened it with 'w'
-    and would have destroyed the whole experiment history)."""
-    md_path = os.path.join(REPO, "BENCH.md")
-    lo, hi = summary["levels"]
-    lines = [
-        AUTO_BEGIN,
-        f"## Measured (auto): {lo['executors']} → {hi['executors']} executors, "
-        f"{summary['tagger']} tagger",
-        "",
-        "Same `spark-submit --py-files` job (`scripts/kg_job.py`) on the same",
-        "input at two executor counts — separate single-core executor JVMs via",
-        "local-cluster[N,1,m], the sandbox model of N vs 4N executors.",
-        "",
-        f"Input: deterministic synthetic Common-Crawl-style corpus, "
-        f"{summary['n_docs']} docs (incl. one 400-sentence giant doc; "
-        "skewed hosts ~30% on 2 of 10 hosts).",
-        "",
-        "| master | executors | shuffle parts | pipeline sec | docs/sec |",
-        "|---|---|---|---|---|",
-    ]
-    for lv in (lo, hi):
-        lines.append(
-            f"| local-cluster[{lv['executors']},1,{EXEC_MEM_MB}] | {lv['executors']} | {lv['shuffle_partitions']} "
-            f"| {lv['pipeline_sec']} | {lv['docs_per_sec']} |"
-        )
-    lines += [
-        "",
-        f"**Scaling efficiency ({lo['executors']}→{hi['executors']} executors): "
-        f"{summary['scaling_efficiency']}** "
-        f"(= ({hi['docs_per_sec']} / {lo['docs_per_sec']}) / "
-        f"({hi['executors']}/{lo['executors']})); north-rule target ≥ "
-        # the SAME boolean as the JSON summary — deciding from the rounded
-        # value could print PASS for a raw 0.7996
-        f"{summary['target']} → {'PASS' if summary['pass'] else 'FAIL'}.",
-        "",
-    ]
-    probe = summary.get("cpu_probe")
-    if probe:
-        lines += [
-            # header derives ENTIRELY from the MEASURED levels — both the
-            # endpoints and the multiplier (a hardcoded '4N' over a 2→6 run
-            # would state false arithmetic in the evidence document)
-            f"## Why N={lo['executors']} → "
-            f"{hi['executors'] / lo['executors']:g}N={hi['executors']} "
-            "executors (and not 8 → 32)",
-            "",
-            "A Spark-free pure-CPU probe (N worker processes, fixed work per"
-            " process, zero shared data) on this sandbox VM measures:",
-            "",
-            f"| probe | 1 proc | 8 procs | 32 procs |",
-            f"|---|---|---|---|",
-            f"| wall for identical per-proc work | {probe['t_1proc']}s "
-            f"| {probe['t_8proc']}s | {probe['t_32proc']}s |",
-            "",
-            f"Per-worker hardware efficiency: 1→8 procs {probe['hw_eff_1to8']},"
-            f" **8→32 procs {probe['hw_eff_8to32']}** — the advertised 32 vCPUs"
-            " are overcommitted/throttled, so ANY job (even embarrassingly"
-            " parallel arithmetic) caps near 0.8 from 8→32 on this box. The"
-            f" {lo['executors']}→{hi['executors']}-executor run above therefore measures the engine"
-            " inside the machine's honest capacity; on a real cluster the same"
-            " spark-submit runs at N and 4N executors unchanged.",
-            "",
-        ]
-    lines += [
-        "Reproduce: `python scripts/scaling_bench.py --update-md`",
-        AUTO_END,
-    ]
-    block = "\n".join(lines)
-    existing = ""
-    if os.path.exists(md_path):
-        with open(md_path) as f:
-            existing = f.read()
-    if AUTO_BEGIN in existing and AUTO_END in existing:
-        pre = existing.split(AUTO_BEGIN, 1)[0]
-        post = existing.split(AUTO_END, 1)[1]
-        out = pre + block + post
-    else:
-        out = (existing.rstrip() + "\n\n" if existing else "") + block + "\n"
-    with open(md_path, "w") as f:
-        f.write(out)
-
-
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    # ~200k realistic-weight pages: parallel compute dominates the ~20 s
-    # serial floor (driver planning, fingerprint collect, 1-task manifest
-    # stages) — the sandbox stand-in for "the job is hours long on a real
-    # cluster, so fixed costs vanish"
-    ap.add_argument("--n-docs", type=int, default=int(os.environ.get("SPARK_GRAFT_SCALING_DOCS", "200000")))
-    ap.add_argument("--cores", type=int, nargs=2, default=[2, 8],
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
+    ap.add_argument("--workload", choices=["kg", "neural", "train", "analytics"],
+                    default="kg")
+    ap.add_argument("--cores", type=int, nargs=2, default=[1, 4],
                     help="executor counts: N and 4N single-core executor JVMs")
-    ap.add_argument("--tagger", choices=["dict", "neural"], default="dict",
-                    help="neural = BiLSTM mapInPandas inference (the north-star"
-                         " compute kernel); use a smaller --n-docs")
     ap.add_argument("--trials", type=int, default=1,
-                    help="runs per level; min wall is reported (vCPU jitter)")
+                    help="runs per level; the best throughput is reported")
     ap.add_argument("--conf", action="append", default=[], dest="extra_conf",
                     metavar="K=V", help="extra spark conf, repeatable")
-    ap.add_argument("--shuffle-partitions", type=int, default=None,
-                    help="fixed shuffle partitions at BOTH levels (default: "
-                         "kg_job's per-core heuristic)")
-    ap.add_argument("--pilot-docs", type=int, default=0,
-                    help="kg_job --pilot-docs: untimed full-pipeline warmup "
-                         "pass before the timed section at BOTH levels")
     ap.add_argument("--event-log-dir", default=None,
                     help="enable Spark event logs (for scripts/stage_forensics.py)")
-    ap.add_argument("--no-probe", action="store_true")
-    ap.add_argument("--update-md", action="store_true")
+    ap.add_argument("--shuffle-partitions", type=int, default=None,
+                    help="fixed shuffle partitions at BOTH levels (default: "
+                         "kg_job's per-core heuristic; 96 for analytics)")
+    g = ap.add_argument_group("kg / neural")
+    g.add_argument("--n-docs", type=int, default=4000)
+    g.add_argument("--pilot-docs", type=int, default=0,
+                   help="kg_job --pilot-docs: untimed full-pipeline warmup "
+                        "pass before the timed section at BOTH levels")
+    g = ap.add_argument_group("train")
+    g.add_argument("--n-sentences", type=int, default=8192)
+    g.add_argument("--batch", type=int, default=2048)
+    g.add_argument("--epochs", type=int, default=3)
+    g.add_argument("--batch-norm", action="store_true",
+                   help="measure the sync-BN trainer (extra per-site "
+                        "stat/backward reductions per step)")
+    g = ap.add_argument_group("analytics")
+    g.add_argument("--n-ent", type=int, default=50_000)
+    g.add_argument("--n-edges", type=int, default=2_000_000)
     args = ap.parse_args()
 
-    pages, alias = prepare_input(args.n_docs)
-    zpath = make_zip()
-    levels = [
-        run_level_best(c, pages, alias, zpath, tagger=args.tagger,
-                       trials=args.trials, extra_conf=args.extra_conf,
-                       event_log_dir=args.event_log_dir,
-                       shuffle_partitions=args.shuffle_partitions,
-                       pilot_docs=args.pilot_docs)
-        for c in args.cores
-    ]
-    lo, hi = levels
-    # efficiency uses the REQUESTED executor counts: the job-side "cores"
-    # field reads sc.defaultParallelism, which Spark floors at 2 even on a
-    # 1-executor cluster (local-cluster[1,...] used to report cores=2 here
-    # and silently inflate the ratio)
-    lo["executors"], hi["executors"] = args.cores
-    eff = (hi["docs_per_sec"] / lo["docs_per_sec"]) / (args.cores[1] / args.cores[0])
-    summary = {
-        "n_docs": args.n_docs,
-        "tagger": args.tagger,
-        "levels": levels,
+    from bioner_spark.session import memory_share_mb
+
+    script, argv, key, conf = payload(args)
+    conf += args.extra_conf
+    if args.event_log_dir:
+        os.makedirs(args.event_log_dir, exist_ok=True)
+        conf += ["spark.eventLog.enabled=true",
+                 f"spark.eventLog.dir=file://{args.event_log_dir}"]
+    job = ["--py-files", make_zip(), os.path.join(REPO, "scripts", script), *argv]
+    mem_mb = memory_share_mb(max(args.cores) + 1)
+    lo, hi = (run_level(n, mem_mb, conf, job, key, args.trials) for n in args.cores)
+    eff = (hi[key] / lo[key]) / (args.cores[1] / args.cores[0])
+    print(json.dumps({
+        "args": vars(args),
+        "memory_mb": mem_mb,
+        "throughput_key": key,
+        "levels": [lo, hi],
         "scaling_efficiency": round(eff, 3),
         "target": 0.8,
         "pass": eff >= 0.8,
-        "cpu_probe": None if args.no_probe else cpu_probe(),
-    }
-    if args.update_md:
-        update_md(summary)
-    print(json.dumps(summary))
+    }))
 
 
 if __name__ == "__main__":

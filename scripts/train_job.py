@@ -5,7 +5,8 @@ The training-side analogue of scripts/kg_job.py for the two-parallelism
 scaling evidence: the per-step work (numpy BPTT forward/backward over each
 partition's slice of the global batch) is the parallel axis; the Adam
 update is a driver-side reduce of ~|params| floats per step. Submitted by
-scripts/train_scaling.py at N and 4N single-core executor JVMs.
+`scripts/scaling_bench.py --workload train` at N and 4N single-core
+executor JVMs.
 """
 
 from __future__ import annotations
@@ -65,19 +66,16 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from bioner_spark.ner.kernel import init_model
     from bioner_spark.ner.train import train_distributed
+    from bioner_spark.session import get_spark, stable_default_parallelism
 
-    spark = SparkSession.builder.appName("train_scaling").getOrCreate()
+    spark = get_spark(app_name="bioner_train_job")
     if not args.n_shards:
         # read parallelism only AFTER executors register and the count
         # stabilizes (session.stable_default_parallelism) — an early read
         # would silently train with too few shards and report pessimistic
         # sentences/sec
-        from bioner_spark.session import stable_default_parallelism
-
         stable_default_parallelism(spark)
     n_shards = args.n_shards or spark.sparkContext.defaultParallelism
 

@@ -29,7 +29,7 @@ The PageRank check additionally asserts rank-mass conservation after
 6-dp rounding across all 50k entities (|Σrank − 1| ≤ n·5e-7), the
 adversarial float condition the round-4 verdict called out.
 
-Run from the repo root (~6 min on local[32]):
+Run from the repo root (~6 min on 32 cores; get_spark runs local[usable cores]):
 
     python scripts/verify_kg_scale.py [out_dir]     # default /tmp/bioner_kg50k
 """
