@@ -90,13 +90,16 @@ def _submitted_conf():
 
     spark-submit launches the JVM first, passes its port in
     $PYSPARK_GATEWAY_PORT and sets the submit command's keys as JVM system
-    properties, which `SparkConf()` reads. A plain driver must not touch
-    the JVM here: driver memory and -X options only take effect when the
-    builder launches it."""
+    properties. `SparkConf()` reads those only once Python is attached to
+    that JVM — before, it is an empty Python-side dict — so attach first
+    (this connects to the running gateway and launches nothing). A plain
+    driver must not touch the JVM here: driver memory and -X options only
+    take effect when the builder launches it."""
     if "PYSPARK_GATEWAY_PORT" not in os.environ:
         return None
-    from pyspark import SparkConf
+    from pyspark import SparkConf, SparkContext
 
+    SparkContext._ensure_initialized()
     return SparkConf()
 
 

@@ -17,9 +17,9 @@ Workloads (--workload): payload script, input, throughput key.
   analytics  scripts/analytics_job.py          skewed triples table  triples_per_sec
 
 Usage:
-    python scripts/scaling_bench.py --workload kg --n-docs 4000 --cores 1 4
-    python scripts/scaling_bench.py --workload neural --n-docs 1000
-    python scripts/scaling_bench.py --workload train --n-sentences 4096
+    python scripts/scaling_bench.py --workload kg --cores 1 4
+    python scripts/scaling_bench.py --workload neural --n-docs 16000
+    python scripts/scaling_bench.py --workload train --n-sentences 8192
     python scripts/scaling_bench.py --workload analytics --n-edges 2000000
 
 Memory fits the box: the driver and every executor at the larger level get
@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import multiprocessing
 import os
 import shutil
 import subprocess
@@ -47,16 +48,10 @@ WORK = os.environ.get("SPARK_GRAFT_SCALING_DIR", "/tmp/bioner_scaling")
 sys.path.insert(0, REPO)
 
 
-def prepare_pages(n_docs: int) -> tuple[str, str]:
+def _write_pages(n_docs: int, pages_path: str, alias_path: str) -> None:
     from bioner_spark.corpus import alias_dict_spark_df, generate, pages_spark_df
     from bioner_spark.session import get_spark
 
-    pages_path = f"{WORK}/input/pages"
-    alias_path = f"{WORK}/input/alias"
-    stamp = f"{WORK}/input/STAMP_{n_docs}_v2"
-    if os.path.exists(stamp):
-        return pages_path, alias_path
-    shutil.rmtree(f"{WORK}/input", ignore_errors=True)
     spark = get_spark(app_name="scaling_prep")
     # sent_range (20, 60): realistic web-page weight — ~40 sentences/doc —
     # so the measured job is extraction/tagging compute, not row plumbing
@@ -64,15 +59,24 @@ def prepare_pages(n_docs: int) -> tuple[str, str]:
                       with_gold=False)
     pages_spark_df(spark, corpus).repartition(32).write.mode("overwrite").parquet(pages_path)
     alias_dict_spark_df(spark, corpus).coalesce(1).write.mode("overwrite").parquet(alias_path)
-    # end the JVM too (it exits when its stdin closes): its heap must not
-    # sit next to the payloads' JVMs for the rest of the run
-    from pyspark import SparkContext
-
-    gateway = SparkContext._gateway
     spark.stop()
-    gateway.proc.stdin.close()
-    gateway.proc.wait(timeout=60)
-    SparkContext._gateway = SparkContext._jvm = None
+
+
+def prepare_pages(n_docs: int) -> tuple[str, str]:
+    pages_path = f"{WORK}/input/pages"
+    alias_path = f"{WORK}/input/alias"
+    stamp = f"{WORK}/input/STAMP_{n_docs}_v2"
+    if os.path.exists(stamp):
+        return pages_path, alias_path
+    shutil.rmtree(f"{WORK}/input", ignore_errors=True)
+    # in a child process, so the prep JVM and its heap end before the
+    # payloads' JVMs start
+    child = multiprocessing.get_context("spawn").Process(
+        target=_write_pages, args=(n_docs, pages_path, alias_path))
+    child.start()
+    child.join()
+    if child.exitcode:
+        raise RuntimeError(f"page prep exited with {child.exitcode}")
     open(stamp, "w").close()
     return pages_path, alias_path
 
@@ -119,6 +123,7 @@ def payload(args) -> tuple[str, list[str], str, list[str]]:
     `{n}` filled per run), its throughput key and its extra spark conf.
     Prepares the input once."""
     if args.workload in ("kg", "neural"):
+        args.n_docs = args.n_docs or (100_000 if args.workload == "kg" else 16_000)
         pages, alias = prepare_pages(args.n_docs)
         argv = ["--input", pages, "--alias", alias, "--output", "{out}",
                 "--n-buckets", "32",
@@ -203,11 +208,21 @@ def main() -> None:
                     help="fixed shuffle partitions at BOTH levels (default: "
                          "kg_job's per-core heuristic; 96 for analytics)")
     g = ap.add_argument_group("kg / neural")
-    g.add_argument("--n-docs", type=int, default=4000)
+    # Each default sizes the slower (N=1) level to 6-7 minutes on a
+    # 4-vCPU/15 GB box, inside a ~10-minute budget, so fixed per-job cost
+    # (~50 s of driver planning, per-bucket manifest jobs, executor start)
+    # is a small share of the wall: at 4,000 kg docs it was most of it
+    # (efficiency 0.232; 0.541 at 100k). 200k kg docs overflow the 1.6 GB
+    # executor heap at N=1. The neural tagger costs ~7x more per doc.
+    g.add_argument("--n-docs", type=int, default=None,
+                   help="default 100000 (kg), 16000 (neural)")
     g.add_argument("--pilot-docs", type=int, default=0,
                    help="kg_job --pilot-docs: untimed full-pipeline warmup "
                         "pass before the timed section at BOTH levels")
     g = ap.add_argument_group("train")
+    # 8,192 sentences: the N=1 level takes ~6 minutes (3 epochs of ~70 s
+    # plus setup); each step's fixed sync cost weighs less than at 4,096
+    # (efficiency 0.842 vs 0.783)
     g.add_argument("--n-sentences", type=int, default=8192)
     g.add_argument("--batch", type=int, default=2048)
     g.add_argument("--epochs", type=int, default=3)
@@ -215,6 +230,9 @@ def main() -> None:
                    help="measure the sync-BN trainer (extra per-site "
                         "stat/backward reductions per step)")
     g = ap.add_argument_group("analytics")
+    # analytics_job times its second write_analytics pass, so the N=1 level
+    # pays two passes; at 2M edges that is ~6 minutes, and the per-round
+    # PageRank/k-hop jobs are still a visible floor (efficiency 0.47)
     g.add_argument("--n-ent", type=int, default=50_000)
     g.add_argument("--n-edges", type=int, default=2_000_000)
     args = ap.parse_args()

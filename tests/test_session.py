@@ -26,6 +26,8 @@ print(json.dumps({
     "driver_memory": conf.get("spark.driver.memory"),
     "time_zone": spark.conf.get("spark.sql.session.timeZone"),
     "arrow_batch": spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"),
+    "skew_join": spark.conf.get("spark.sql.adaptive.skewJoin.enabled"),
+    "app_name": spark.sparkContext.appName,
 }))
 spark.stop()
 """
@@ -44,6 +46,9 @@ def test_get_spark_keeps_the_submit_command_conf(tmp_path):
             "--master", "local[2]",
             "--driver-memory", "1g",
             "--conf", "spark.sql.shuffle.partitions=7",
+            # keys the engine defaults also set: the submit command wins
+            "--conf", "spark.sql.adaptive.skewJoin.enabled=false",
+            "--name", "submitted_app",
             str(script),
         ],
         capture_output=True, text=True, cwd=tmp_path, env=env, timeout=300,
@@ -57,4 +62,6 @@ def test_get_spark_keeps_the_submit_command_conf(tmp_path):
         "driver_memory": "1g",
         "time_zone": "UTC",
         "arrow_batch": "2048",
+        "skew_join": "false",
+        "app_name": "submitted_app",
     }
