@@ -204,10 +204,9 @@ def main() -> None:
     # --- corpus_filter: the composed C4-style cleaning chain ------------------
     # timed AFTER the total is fixed (kept out of headline_total_sec so the
     # round-over-round total stays comparable with rounds 1-2); added round 3
-    # to track the single-scan rewrite (one persisted word-array base feeding
-    # exact-dup, near-dup and decontamination instead of 3-4 corpus scans).
-    # Single pass, NOT min-of-passes: its module-level base cache would make
-    # a second pass a cache-hit measurement of a different thing.
+    # to track the single-scan rewrite (one materialized word-array base
+    # feeding exact-dup, near-dup and decontamination instead of 3-4 corpus
+    # scans). Single pass, as every round since 3 timed it.
     def run_corpus_filter():
         import __spark_entry__ as entry
 

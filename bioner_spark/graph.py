@@ -1,19 +1,19 @@
 """Connected components over an edge DataFrame — alias canonicalization.
 
 GraphFrames is not installed (SURVEY.md §7), so this is plain DataFrame
-iteration. Three paths:
+iteration. Two paths:
 
   * driver union-find for driver-sized graphs (the alias dictionary is a
     broadcast-sized dimension table by contract — one collect, no rounds);
   * large-star/small-star (Kiveris et al., "Connected Components in
-    MapReduce and Beyond", SoCC'14) — the DISTRIBUTED DEFAULT: converges in
+    MapReduce and Beyond", SoCC'14) — the DISTRIBUTED path: converges in
     O(log d) rounds on diameter-d graphs, each round a groupBy + join
-    hash-partitioned on the node id (AQE reuses the exchange layout);
-  * min-label propagation (O(d) rounds) kept as
-    `connected_components_propagation` — simpler, fine for near-star alias
-    graphs, differential-tested against the star variant.
+    hash-partitioned on the node id (AQE reuses the exchange layout).
 
-All paths are deterministic (component id = min node id), so output is
+tests/test_graph.py keeps O(d)-round min-label propagation as the star
+path's differential oracle.
+
+Both paths are deterministic (component id = min node id), so output is
 run- and retry-invariant (SURVEY.md §4 engineering point 5). Lineage is
 truncated each round — without it the plan doubles per iteration and the
 job dies on plan-compile time. Default is localCheckpoint (executor-local
@@ -256,67 +256,6 @@ def connected_components_star(
     # plan is NOT re-executed here)
     isolated = all_nodes.join(result.select("node").distinct(), "node", "left_anti")
     return result.union(isolated.select("node", F.col("node").alias("component")))
-
-
-def connected_components_propagation(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iterations: int = 25,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Min-label propagation to fixpoint — O(diameter) rounds. Kept as the
-    simple differential authority for the star variant; fine for near-star
-    alias graphs (diameter ~2-4)."""
-    pairs = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    # NULL-endpoint law, identical to the driver and star paths: NULL is
-    # not a node (never seeded, never emitted), but the NON-null endpoint
-    # of a half-NULL edge is still a node — it just has no neighbor from
-    # that edge. Without this, `sym` seeded a spurious NULL label row that
-    # adopted its neighbor's component and broke three-way agreement.
-    valid = pairs.filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-    sym = (
-        valid.union(valid.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-    )
-    labels = (
-        pairs.select(F.col("u").alias("node"))
-        .union(pairs.select(F.col("v").alias("node")))
-        .filter(F.col("node").isNotNull())
-        .distinct()
-        .withColumn("component", F.col("node"))
-    )
-    labels = _truncate(labels, checkpoint_dir)
-    sym = _truncate(sym, checkpoint_dir)
-
-    for _ in range(max_iterations):
-        neighbor_min = (
-            sym.join(labels, sym["v"] == labels["node"], "inner")
-            .select(F.col("u").alias("node"), "component")
-            .groupBy("node")
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nbr_component"), F.col("component"))
-                ).alias("component"),
-            )
-        )
-        new_labels = _truncate(new_labels, checkpoint_dir)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
 
 
 def canonical_map(alias_dict: DataFrame, driver_threshold: int = 2_000_000) -> DataFrame:

@@ -147,20 +147,23 @@ def entity_degree(triples: DataFrame) -> DataFrame:
       n_preds — distinct predicates the entity participates in (either side)
       n_docs — distinct documents supporting the entity (either side)
 
-    Formulation: per-metric distinct-then-count aggregations joined on
-    `entity` — NOT a single multi-count-distinct agg. Spark expands a
-    multi-count-distinct through the Expand operator (~5× row
-    multiplication BEFORE the partial aggregation), which at a 10^12-row
-    triple table turns the hottest entities' pre-shuffle volume into the
-    bottleneck. Here every distinct is a map-side-combinable dedup on its
-    own narrow key, each feeding a tiny per-entity count, and the final
-    joins are |entities|-sized (AQE broadcasts at test SF). The cost is
+    Formulation: per-metric distinct-then-count, NOT a single
+    multi-count-distinct agg. Spark expands a multi-count-distinct through
+    the Expand operator (~5× row multiplication BEFORE the partial
+    aggregation), which at a 10^12-row triple table turns the hottest
+    entities' pre-shuffle volume into the bottleneck. Here every distinct
+    is a map-side-combinable dedup on its own narrow key; the three
+    deduped projections and the raw side rows are unioned and counted in
+    ONE groupBy(entity), so no per-metric join is needed. The cost is
     four column-pruned passes over `sides` instead of one — callers are
     expected to hand in a MATERIALIZED triples table (the pipeline's
     Parquet/Iceberg product) so each pass is a ≤4-column storage scan,
-    the same contract as cooccurrence_pmi's documented re-scan. Inner
-    joins are lossless: every entity appearing in `sides` appears in all
-    four aggregates (nbr/pred/doc_id are non-null by triple construction)."""
+    the same contract as cooccurrence_pmi's documented re-scan.
+
+    NULL law (the oracle's GROUP BY / COUNT(DISTINCT)): a NULL nbr, pred
+    or doc_id is not a value and counts 0, while its triple row still
+    counts in out_triples / in_triples; a NULL endpoint is one NULL
+    entity group."""
     sides = triples.select(
         F.col("subj").alias("entity"),
         F.lit(True).alias("is_out"),
@@ -176,48 +179,18 @@ def entity_degree(triples: DataFrame) -> DataFrame:
             "doc_id",
         )
     )
-    base = sides.groupBy("entity").agg(
-        F.sum(F.when(F.col("is_out"), 1).otherwise(0)).alias("out_triples"),
-        F.sum(F.when(F.col("is_out"), 0).otherwise(1)).alias("in_triples"),
-    )
-    nbrs = (
-        sides.select("entity", "is_out", "nbr")
-        .distinct()
-        .groupBy("entity")
-        .agg(
-            F.sum(F.when(F.col("is_out"), 1).otherwise(0)).alias(
-                "out_neighbors"
-            ),
-            F.sum(F.when(F.col("is_out"), 0).otherwise(1)).alias(
-                "in_neighbors"
-            ),
+    rows = sides.select("entity", F.col("is_out").alias("row_out"))
+    for key in (["is_out", "nbr"], ["pred"], ["doc_id"]):
+        rows = rows.unionByName(
+            sides.select("entity", *key).distinct(), allowMissingColumns=True
         )
-    )
-    preds = (
-        sides.select("entity", "pred")
-        .distinct()
-        .groupBy("entity")
-        .agg(F.count(F.lit(1)).alias("n_preds"))
-    )
-    docs = (
-        sides.select("entity", "doc_id")
-        .distinct()
-        .groupBy("entity")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-    return (
-        base.join(nbrs, "entity")
-        .join(preds, "entity")
-        .join(docs, "entity")
-        .select(
-            "entity",
-            "out_triples",
-            "in_triples",
-            "out_neighbors",
-            "in_neighbors",
-            "n_preds",
-            "n_docs",
-        )
+    return rows.groupBy("entity").agg(
+        F.count(F.when(F.col("row_out"), 1)).alias("out_triples"),
+        F.count(F.when(~F.col("row_out"), 1)).alias("in_triples"),
+        F.count(F.when(F.col("is_out"), F.col("nbr"))).alias("out_neighbors"),
+        F.count(F.when(~F.col("is_out"), F.col("nbr"))).alias("in_neighbors"),
+        F.count("pred").alias("n_preds"),
+        F.count("doc_id").alias("n_docs"),
     )
 
 

@@ -52,7 +52,7 @@ MASK32 = 0xFFFFFFFF
 EOS = "</s>"
 
 # fixture-lattice constants — shared (as literals) with the DuckDB oracle in
-# __spark_entry__.oracle_sql()["fasttext_vectors"]
+# bioner_spark/contract/neural.py's fasttext_vectors oracle
 LATTICE_A = 2654435761  # Knuth multiplicative-hash constant
 LATTICE_B = 40503
 LATTICE_C = 17

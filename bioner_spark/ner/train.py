@@ -826,7 +826,7 @@ def train_single_node(
 # --------------------------------------------------------------------------
 # B2: deterministic document-level shuffle → global sentence order
 # --------------------------------------------------------------------------
-def assign_doc_shuffled_order(df, seed: int, order_partitions: int | None = None):
+def assign_doc_shuffled_order(df, seed: int):
     """Doc-level shuffle (reference CoNLLDataLoader: random.shuffle of
     dataset.documents then flatten, conll_dataloader.py:10-12) as a
     deterministic distributed op: documents ordered by xxhash64(seed,
@@ -843,8 +843,7 @@ def assign_doc_shuffled_order(df, seed: int, order_partitions: int | None = None
     from pyspark.sql import functions as F
 
     spark = df.sparkSession
-    if order_partitions is None:
-        order_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_ranges = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     doc_counts = (
         df.groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("_n_sent"))
@@ -852,7 +851,7 @@ def assign_doc_shuffled_order(df, seed: int, order_partitions: int | None = None
     )
     sort_key = [F.asc("_shuf"), F.asc("doc_id")]
     ranged = (
-        doc_counts.repartitionByRange(order_partitions, *sort_key)
+        doc_counts.repartitionByRange(n_ranges, *sort_key)
         .withColumn("_pid", F.spark_partition_id())
         .persist(StorageLevel.MEMORY_AND_DISK)
     )

@@ -60,7 +60,7 @@ def normalized(text_col):
     measured divergence, so a VT in a document would normalize differently
     per engine and every fingerprint/minhash oracle downstream would
     mismatch. The explicit class is byte-identical semantics in both; the
-    oracle SQL (`__spark_entry__._NORM_SQL`) states the same class."""
+    oracle SQL (`bioner_spark.contract.sql._NORM_SQL`) states the same class."""
     return F.trim(F.regexp_replace(F.lower(text_col), r"[ \t\n\x0B\f\r]+", " "))
 
 

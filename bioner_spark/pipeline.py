@@ -285,9 +285,7 @@ def multiset_fingerprint(df: DataFrame, cols: tuple | None = None) -> str:
     return f'{row["n"]}:{row["x"]}:{row["s"]}'
 
 
-def bucket_fingerprints(
-    pages: DataFrame, n_buckets: int, fingerprint_cols: tuple | None = None
-) -> DataFrame:
+def bucket_fingerprints(pages: DataFrame, n_buckets: int) -> DataFrame:
     """Per-bucket input fingerprint — order-free AND multiset-sensitive.
 
     Three folded components: row count, xor of row hashes, and a bounded
@@ -298,12 +296,10 @@ def bucket_fingerprints(
     sane bucket sizing; this stays a cheap column-pruned scan, no ANSI
     overflow risk).
 
-    fingerprint_cols defaults to (url, warc_ts) when the input carries a
-    crawl timestamp — a RECRAWL of the same url then changes the
-    fingerprint and the bucket is recomputed; url-only fingerprinting is
-    blind to content changes at a stable url. Pass an explicit tuple to
-    override (e.g. include a content hash column if the source provides
-    one).
+    Rows hash (url, warc_ts) when the input carries a crawl timestamp —
+    a RECRAWL of the same url then changes the fingerprint and the bucket
+    is recomputed; url-only fingerprinting is blind to content changes at
+    a stable url.
 
     n_docs counts INPUT rows — including every recrawled copy of a url —
     because the fingerprint must change whenever the input multiset does
@@ -311,11 +307,8 @@ def bucket_fingerprints(
     build_triples will process only one copy). Read it as "input rows",
     not "documents processed"; the processed count is lower whenever the
     bucket contains recrawls."""
-    if fingerprint_cols is None:
-        fingerprint_cols = (
-            ("url", "warc_ts") if "warc_ts" in pages.columns else ("url",)
-        )
-    h = F.xxhash64(*[F.col(c) for c in fingerprint_cols])
+    cols = ("url", "warc_ts") if "warc_ts" in pages.columns else ("url",)
+    h = F.xxhash64(*[F.col(c) for c in cols])
     n, x, s = _multiset_fingerprint_aggs("_h")
     return (
         pages.withColumn("bucket", _bucket_col(n_buckets))

@@ -1,6 +1,6 @@
 """Supplementary-plane (astral) cross-engine casing probe.
 
-The LOWER_SQL shim in __spark_entry__.py was derived exhaustively over the
+The LOWER_SQL shim in bioner_spark/contract/sql.py was derived exhaustively over the
 BMP.  This probe extends the derivation to planes 1-16: for every
 supplementary codepoint it compares, between Spark (ICU) and DuckDB
 (utf8proc + RE2),
@@ -26,7 +26,7 @@ import duckdb  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from bioner_spark.session import get_spark  # noqa: E402
-from __spark_entry__ import _CASED_CLASS, _CI_CLASS, _expand_lower_sql  # noqa: E402
+from bioner_spark.contract.sql import _CASED_CLASS, _CI_CLASS, _expand_lower_sql  # noqa: E402
 
 
 def supplementary_codepoints():

@@ -7,7 +7,7 @@ function-semantics divergence that only fires on edge input stays latent
 until a real corpus hits it. This script materializes a corpus that fires
 the known edge classes on purpose; `scripts/verify_oracle.py <out_dir>`
 must still report ALL OK. Divergences this sweep has already caught (each
-now pinned by an explicit law in `__spark_entry__.py`):
+now pinned by an explicit law in `bioner_spark/contract/`):
 
   * DuckDB bare trim() strips Unicode whitespace (NBSP, U+2000…) while
     Spark F.trim strips ASCII space only → leading-NBSP doc fingerprinted
@@ -25,7 +25,7 @@ now pinned by an explicit law in `__spark_entry__.py`):
   * DuckDB lower() is a simple 1:1 map while Spark applies Unicode
     SpecialCasing: 'İ' → 'i' + combining dot and contextual final sigma
     (ΣΟΦΙΑΣ → σοφιας, not σοφιασ) → every lower()-based oracle diverged
-    on Turkish/Greek text (fixed: the LOWER_SQL shim in __spark_entry__;
+    on Turkish/Greek text (fixed: the LOWER_SQL shim in contract/sql.py;
     disclosed residual: a case-ignorable run between Σ and the word
     boundary, e.g. 'ΟΣ.α').
 

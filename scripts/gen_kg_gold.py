@@ -7,7 +7,7 @@ The fixtures come from the single-node generator (corpus.py) — never from
 the Spark engine — so the oracle is independent of the code under test.
 
 Must match the query's corpus parameters exactly:
-    generate(n_docs=60, giant_doc_sentences=40)   (__spark_entry__.py)
+    generate(n_docs=60, giant_doc_sentences=40)   (bioner_spark/contract/kg.py)
 
 Run from the repo root: python scripts/gen_kg_gold.py
 """

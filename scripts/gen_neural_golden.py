@@ -4,7 +4,7 @@ Single-node authority (NO Spark): tokenize the fixed fixture sentences,
 encode each token with the fastText fixture model, run the stacked+BN
 sequence model per sentence (un-batched — the kernel is batching-invariant,
 tests/test_ner_kernel.py), print the VALUES literal to paste into
-__spark_entry__.py.
+bioner_spark/contract/neural.py.
 
 The driver then compares the DISTRIBUTED path (mapInPandas fastText encode →
 token-budget batched forward) against these independently-computed values —
@@ -23,7 +23,10 @@ import numpy as np
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from __spark_entry__ import NEURAL_FIXTURE_SENTENCES, neural_fixture_models  # noqa: E402
+from bioner_spark.contract.neural import (  # noqa: E402
+    NEURAL_FIXTURE_SENTENCES,
+    neural_fixture_models,
+)
 
 
 def main() -> None:

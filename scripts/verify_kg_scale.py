@@ -47,6 +47,9 @@ import pyarrow.parquet as pq
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bioner_spark.contract.kg import (  # noqa: E402
+    _DEGREE_SQL, _PMI_SQL, _khop_cte, _pagerank_cte,
+)
 from scripts.verify_oracle import compare  # noqa: E402
 
 N_ENT = 50_000
@@ -77,35 +80,6 @@ def gen_triples(
 
 
 # --- oracles over a DuckDB view named `triples` ---------------------------
-
-DEGREE_SQL = """
-WITH sides AS (
-  SELECT subj AS entity, TRUE AS is_out, obj AS nbr, pred, doc_id FROM triples
-  UNION ALL
-  SELECT obj AS entity, FALSE AS is_out, subj AS nbr, pred, doc_id FROM triples
-)
-SELECT entity,
-       SUM(CASE WHEN is_out THEN 1 ELSE 0 END)::BIGINT AS out_triples,
-       SUM(CASE WHEN is_out THEN 0 ELSE 1 END)::BIGINT AS in_triples,
-       COUNT(DISTINCT CASE WHEN is_out THEN nbr END)::BIGINT AS out_neighbors,
-       COUNT(DISTINCT CASE WHEN NOT is_out THEN nbr END)::BIGINT AS in_neighbors,
-       COUNT(DISTINCT pred)::BIGINT AS n_preds,
-       COUNT(DISTINCT doc_id)::BIGINT AS n_docs
-FROM sides GROUP BY entity
-"""
-
-PMI_SQL = """
-WITH pm_pairs AS (
-  SELECT subj, obj, COUNT(*)::BIGINT AS n_pair FROM triples GROUP BY subj, obj
-),
-pm_sm AS (SELECT subj, SUM(n_pair) AS n_subj FROM pm_pairs GROUP BY subj),
-pm_om AS (SELECT obj, SUM(n_pair) AS n_obj FROM pm_pairs GROUP BY obj),
-pm_tot AS (SELECT SUM(n_pair) AS n_total FROM pm_pairs)
-SELECT p.subj, p.obj, p.n_pair,
-       ROUND(LN((p.n_pair::DOUBLE * t.n_total::DOUBLE)
-                / (s.n_subj::DOUBLE * o.n_obj::DOUBLE)), 6) AS pmi
-FROM pm_pairs p JOIN pm_sm s USING (subj) JOIN pm_om o USING (obj) CROSS JOIN pm_tot t
-"""
 
 DIFF_SQL = """
 WITH snap_a AS MATERIALIZED (
@@ -138,7 +112,6 @@ def main() -> None:
 
     from pyspark.sql import functions as F  # noqa: E402
 
-    import __spark_entry__ as entrymod  # for the unrolled CTE builders
     from bioner_spark.kg_analytics import (
         cooccurrence_pmi,
         entity_degree,
@@ -161,20 +134,20 @@ def main() -> None:
         return kg_diff(a, b)
 
     cases = {
-        "kg_degree@50k": (lambda: entity_degree(triples), DEGREE_SQL),
-        "kg_pmi@50k": (lambda: cooccurrence_pmi(triples), PMI_SQL),
+        "kg_degree@50k": (lambda: entity_degree(triples), "WITH " + _DEGREE_SQL),
+        "kg_pmi@50k": (lambda: cooccurrence_pmi(triples), "WITH " + _PMI_SQL),
         "kg_pagerank@50k": (
             lambda: pagerank(triples, iterations=5),
-            "WITH " + entrymod._pagerank_cte(iterations=5).strip(),
+            "WITH " + _pagerank_cte(iterations=5).strip(),
         ),
         "kg_pagerank_weighted@50k": (
             lambda: pagerank(triples, iterations=5, weighted=True),
             "WITH "
-            + entrymod._pagerank_cte(iterations=5, weighted=True).strip(),
+            + _pagerank_cte(iterations=5, weighted=True).strip(),
         ),
         "kg_khop@50k": (
             lambda: khop_neighbors(triples, k=3, n_seeds=5),
-            "WITH " + entrymod._khop_cte(k=3, n_seeds=5).strip(),
+            "WITH " + _khop_cte(k=3, n_seeds=5).strip(),
         ),
         "kg_snapshot_diff@50k": (spark_diff, DIFF_SQL),
     }

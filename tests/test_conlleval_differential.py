@@ -107,7 +107,7 @@ def test_engine_prf1_matches_conlleval(spark, tmp_path):
 def test_neural_pipeline_prf1_matches_conlleval(spark, tmp_path):
     """Close the loop end-to-end: the engine's own neural fixture output
     (distributed inference) evaluated by conlleval vs the engine metric."""
-    from __spark_entry__ import NEURAL_FIXTURE_SENTENCES, neural_fixture_models
+    from bioner_spark.contract.neural import NEURAL_FIXTURE_SENTENCES, neural_fixture_models
     from bioner_spark.io.conll import write_eval_conll
     from bioner_spark.metrics import entity_level_prf1
     from bioner_spark.ner.infer import annotate_tokens_fasttext

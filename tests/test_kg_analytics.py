@@ -60,6 +60,42 @@ def test_entity_degree(small):
     assert (e["out_neighbors"], e["in_neighbors"]) == (0, 1)
 
 
+def test_entity_degree_null_parity_with_oracle(spark):
+    """entity_degree is public over any nullable triples table: on rows
+    with a NULL pred, doc_id or endpoint it must return exactly what the
+    kg_degree oracle's SQL returns in DuckDB — COUNT(DISTINCT) ignores a
+    NULL value, the triple row still counts, and a NULL endpoint is one
+    NULL entity group."""
+    import duckdb
+
+    from bioner_spark.contract.kg import _DEGREE_SQL
+
+    rows = [
+        ("A", "treats", "B", 1, 0),
+        ("A", None, "B", 2, 0),  # NULL pred
+        ("A", "treats", "C", None, 1),  # NULL doc_id
+        (None, "causes", "C", 3, 0),  # NULL subj
+        ("B", "treats", None, 4, 0),  # NULL obj
+        ("D", None, "E", None, 0),  # D and E see only NULL pred/doc_id
+    ]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE triples (subj VARCHAR, pred VARCHAR, obj VARCHAR,"
+        " doc_id BIGINT, sentence_id INT)"
+    )
+    con.executemany("INSERT INTO triples VALUES (?, ?, ?, ?, ?)", rows)
+    want = con.execute("WITH " + _DEGREE_SQL).fetchall()
+    got = [tuple(r) for r in entity_degree(_triples(spark, rows)).collect()]
+
+    def key(r):
+        return (r[0] is not None, r[0] or "")
+
+    assert sorted(got, key=key) == sorted(want, key=key)
+    assert None in {r[0] for r in want}  # the NULL-endpoint group exists
+    d = next(r for r in want if r[0] == "D")
+    assert d[1:] == (1, 0, 1, 0, 0, 0)  # one triple row, no pred or doc
+
+
 def test_cooccurrence_pmi(small):
     got = {
         (r["subj"], r["obj"]): r.asDict()

@@ -9,7 +9,7 @@ import numpy as np
 
 
 def test_committed_golden_matches_authority():
-    from __spark_entry__ import (
+    from bioner_spark.contract.neural import (
         NEURAL_FIXTURE_SENTENCES,
         NEURAL_GOLDEN_TAGS,
         neural_fixture_models,
@@ -33,7 +33,7 @@ def test_committed_golden_matches_authority():
 def test_golden_margins_are_float_safe():
     """Worst-case argmax margin and score-rounding boundary distance must
     dwarf float32 noise, or the oracle could flake across BLAS paths."""
-    from __spark_entry__ import NEURAL_FIXTURE_SENTENCES, neural_fixture_models
+    from bioner_spark.contract.neural import NEURAL_FIXTURE_SENTENCES, neural_fixture_models
 
     ft, model = neural_fixture_models()
     margin = 1e9

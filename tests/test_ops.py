@@ -623,11 +623,11 @@ def test_normalization_law_identical_across_engines(spark):
     sdf = spark.createDataFrame([(p,) for p in probes], "text string")
     got_spark = [r.n for r in sdf.select(normalized(F.col("text")).alias("n")).collect()]
 
-    import __spark_entry__ as entrymod
+    from bioner_spark.contract.sql import _NORM_SQL, _expand_lower_sql
 
     # _NORM_SQL carries the LOWER_SQL marker (expanded in oracle_sql());
     # expand it here exactly as the oracles do.
-    norm_sql = entrymod._expand_lower_sql(entrymod._NORM_SQL)
+    norm_sql = _expand_lower_sql(_NORM_SQL)
     con = duckdb.connect()
     got_duck = [
         con.execute(
@@ -650,7 +650,7 @@ def test_lower_sql_shim_matches_spark_lower(spark):
     scripts (中), multi-Σ runs, and Lm/Sk edge chars."""
     import duckdb
 
-    import __spark_entry__ as entrymod
+    from bioner_spark.contract.sql import _expand_lower_sql
 
     probes = [
         # final-sigma core
@@ -672,7 +672,7 @@ def test_lower_sql_shim_matches_spark_lower(spark):
     sdf = spark.createDataFrame([(p,) for p in probes], "text string")
     got_spark = [r.n for r in sdf.select(F.lower("text").alias("n")).collect()]
     con = duckdb.connect()
-    shim = entrymod._expand_lower_sql("LOWER_SQL(text)")
+    shim = _expand_lower_sql("LOWER_SQL(text)")
     got_duck = [
         con.execute(f"SELECT {shim} AS n FROM (SELECT ? AS text)", [p]).fetchone()[0]
         for p in probes
@@ -694,7 +694,7 @@ def test_lower_sql_shim_supplementary_planes(spark):
     separated from a cased letter by a ci-run containing it."""
     import duckdb
 
-    import __spark_entry__ as entrymod
+    from bioner_spark.contract.sql import _expand_lower_sql
 
     probes = [
         # Vithkuqi (Unicode 14): utf8proc lower() is identity, RE2 classes
@@ -719,7 +719,7 @@ def test_lower_sql_shim_supplementary_planes(spark):
     sdf = spark.createDataFrame([(p,) for p in probes], "text string")
     got_spark = [r.n for r in sdf.select(F.lower("text").alias("n")).collect()]
     con = duckdb.connect()
-    shim = entrymod._expand_lower_sql("LOWER_SQL(text)")
+    shim = _expand_lower_sql("LOWER_SQL(text)")
     got_duck = [
         con.execute(f"SELECT {shim} AS n FROM (SELECT ? AS text)", [p]).fetchone()[0]
         for p in probes
@@ -751,7 +751,7 @@ def test_lower_sql_sigma_classes_exact_over_bmp(spark):
     the only valid authority to derive from."""
     import duckdb
 
-    import __spark_entry__ as entrymod
+    from bioner_spark.contract.sql import _CASED_CLASS, _CI_CLASS
 
     rows = [(cp, chr(cp)) for cp in range(0x20, 0x10000)
             if not (0xD800 <= cp <= 0xDFFF)]
@@ -774,8 +774,8 @@ def test_lower_sql_sigma_classes_exact_over_bmp(spark):
     memb = con.execute(
         "SELECT cp, regexp_matches(c, ?) AS ci, regexp_matches(c, ?) AS cs FROM cps",
         [
-            f"^[{entrymod._CI_CLASS}]$".replace("\\x27", "'"),
-            f"^[{entrymod._CASED_CLASS}]$",
+            f"^[{_CI_CLASS}]$".replace("\\x27", "'"),
+            f"^[{_CASED_CLASS}]$",
         ],
     ).fetchall()
     re_ci = {cp for cp, ci, _ in memb if ci}
