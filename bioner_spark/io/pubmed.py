@@ -30,10 +30,6 @@ from pyspark.sql import functions as F
 
 from bioner_spark.extract import strip_truncation_markers
 
-PUBMED_SCHEMA = (
-    "path string, abstract_idx int, pmid string, raw_abstract string, abstract string"
-)
-
 
 def parse_pubmed_bytes(data: bytes) -> list[tuple[int, str, str]]:
     """One .xml.gz payload → [(abstract_idx, pmid, raw_abstract_text)].

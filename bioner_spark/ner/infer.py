@@ -102,9 +102,6 @@ def _tags_schema(sentences: DataFrame) -> str:
 def _tags_scores_schema(sentences: DataFrame) -> str:
     return _tags_schema(sentences) + ", score double"
 
-N_POSITION = 4
-N_SURFACE = 11
-
 
 def encoded_sentences(tokens: DataFrame, vocab: DataFrame) -> DataFrame:
     """tokens → one row per sentence with parallel feature arrays.

@@ -67,16 +67,3 @@ TRIPLES_SCHEMA = T.StructType(
         T.StructField("sentence_id", T.IntegerType(), False),
     ]
 )
-
-# Per-partition lineage manifest row (checkpointed resume — the engine
-# analogue of the reference's best-checkpoint sink, annotator.py:143-150).
-MANIFEST_SCHEMA = T.StructType(
-    [
-        T.StructField("partition_key", T.StringType(), False),
-        T.StructField("input_fingerprint", T.StringType(), False),
-        T.StructField("n_rows", T.LongType(), False),
-        T.StructField("n_docs", T.LongType(), False),
-        T.StructField("completed_at", T.TimestampType(), False),
-        T.StructField("status", T.StringType(), False),
-    ]
-)

@@ -84,7 +84,7 @@ _ENGINE_CONF = {
 }
 
 
-def _submitted_conf():
+def submitted_conf():
     """The conf spark-submit started this driver's JVM with, or None in a
     plain `python` driver.
 
@@ -120,7 +120,7 @@ def get_spark(
     arguments and `extra_conf` apply in both.
     """
     conf = {"spark.app.name": app_name, **_ENGINE_CONF}
-    submitted = _submitted_conf()
+    submitted = submitted_conf()
     if submitted is not None:
         conf = {k: v for k, v in conf.items() if not submitted.contains(k)}
     else:

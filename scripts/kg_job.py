@@ -32,7 +32,7 @@ import json
 import sys
 import time
 
-from bioner_spark.session import get_spark, stable_default_parallelism
+from bioner_spark.session import get_spark, stable_default_parallelism, submitted_conf
 
 
 def _config_token(args, alias) -> str:
@@ -85,10 +85,6 @@ def main(argv: list[str] | None = None) -> None:
                     help="torch .pt state_dict checkpoint for the neural "
                          "model (reference release format, loaded "
                          "torch-free by torch_import.load_state_dict)")
-    ap.add_argument("--shuffle-partitions", type=int, default=None,
-                    help="override spark.sql.shuffle.partitions (default: "
-                         "max(96, 2x cores; 4x cores for --tagger neural) "
-                         "— the 96 floor bounds per-task sort memory)")
     ap.add_argument("--iceberg-table", default=None,
                     help="also materialize the triples into this Iceberg "
                          "table (catalog.db.table) with per-partition "
@@ -103,14 +99,6 @@ def main(argv: list[str] | None = None) -> None:
                          "tables under this dir — untimed, a second sink "
                          "over the finished triple table like the "
                          "Iceberg mirror")
-    ap.add_argument("--pagerank-iterations", type=int, default=5)
-    ap.add_argument("--pilot-docs", type=int, default=0,
-                    help="run the full pipeline over this many docs BEFORE "
-                         "the timed section (untimed, output discarded). "
-                         "Pays per-JVM one-time costs — JIT/codegen warmup, "
-                         "broadcast machinery, Python worker spawn — the way "
-                         "a long-running cluster has already paid them; "
-                         "BENCH.md discloses when this is used")
     args = ap.parse_args(argv)
 
     spark = get_spark(app_name="bioner_kg_job")
@@ -142,9 +130,13 @@ def main(argv: list[str] | None = None) -> None:
     # 2->8-executor pair moved 0.694 -> 0.786 efficiency (BENCH.md). AQE
     # only COALESCES partitions, never splits, so the floor must come from
     # here; small inputs lose nothing because AQE folds the tail back down.
-    default_shuffle = max(96, (4 if args.tagger == "neural" else 2) * cores)
-    shuffle = args.shuffle_partitions or default_shuffle
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle))
+    # A value the submit command set wins, as it does over get_spark's
+    # engine defaults.
+    submitted = submitted_conf()
+    if submitted is None or not submitted.contains("spark.sql.shuffle.partitions"):
+        spark.conf.set("spark.sql.shuffle.partitions",
+                       str(max(96, (4 if args.tagger == "neural" else 2) * cores)))
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     model = vocab = ft_model = None
     if args.tagger != "neural" and (args.checkpoint_pt or args.embeddings_bin):
@@ -205,23 +197,12 @@ def main(argv: list[str] | None = None) -> None:
 
     from bioner_spark.pipeline import run_checkpointed
 
-    if args.pilot_docs > 0:
-        from bioner_spark.pipeline import build_triples
-
-        pilot = pages.limit(args.pilot_docs)
-        pilot_result = build_triples(pilot, alias, tagger=args.tagger,
-                                     model=model, vocab=vocab,
-                                     ft_model=ft_model)
-        pilot_result.triples.count()
-        # release the pilot's MEMORY_AND_DISK caches before the timed run —
-        # the warmup must not pressure the executors it is stabilizing
-        pilot_result.unpersist()
-
     # config identity for the resume manifest; corpus-derived vocab mode
     # (neural without --embeddings-bin) additionally folds in the global
     # input fingerprint — an input change anywhere changes the vocab and
     # therefore the tags in EVERY bucket (see run_checkpointed docstring)
     cfg_token = _config_token(args, alias)
+    spark.sparkContext.setJobGroup("timed", "run_checkpointed + count")
     t0 = time.time()
     result = run_checkpointed(
         spark,
@@ -240,6 +221,7 @@ def main(argv: list[str] | None = None) -> None:
     )
     n_triples = result.triples.count()
     wall = time.time() - t0
+    spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
 
     if args.iceberg_table:
         # mirror the (bucket-partitioned) triples into the Iceberg table,
@@ -278,7 +260,6 @@ def main(argv: list[str] | None = None) -> None:
             write_analytics(
                 result.triples,
                 args.analytics_dir,
-                pagerank_iterations=args.pagerank_iterations,
                 checkpoint_dir=ckpt_dir,
             )
         finally:

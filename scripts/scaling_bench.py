@@ -9,6 +9,17 @@ share one heap; measured, that mode's allocator/GC contention inverts
 scaling for object-heavy stages.) The harness reports throughput at both
 levels and efficiency = (throughput_4N / throughput_N) / (4N / N).
 
+Every run also explains itself. Each payload tags its timed section's jobs
+with the job group `timed`, and every spark-submit records a plain event
+log. From the best trial's log of each level the JSON line gets `stages`
+(per stage name in the timed group: wall_s, task_s, cpu_s, gc_s,
+shuffle_mb, spill_mb, tasks) and `no_stage_s`, the time between the
+group's first job start and last job end when no stage ran: driver-side
+serial work. At the top level it gets `fixed_s` and `parallel_s`, the fit
+of the two timed walls to T(N) = F + P/N. Flat task_s with a longer wall
+at 4N points to the box (the executors share its vCPUs); growing task_s
+points to the engine.
+
 Workloads (--workload): payload script, input, throughput key.
 
   kg         scripts/kg_job.py --tagger dict   synthetic web pages   docs_per_sec
@@ -29,7 +40,8 @@ level reuses it. Each level reports its best (highest-throughput) of
 --trials runs: this VM's vCPU scheduling is jittery (the same 8-executor
 job measured 187 s and 307 s back to back), and jitter only ever slows a
 run. Inputs are generated once per size under $SPARK_GRAFT_SCALING_DIR
-(default /tmp/bioner_scaling); one JSON summary goes to stdout.
+(default /tmp/bioner_scaling), event logs go to its events/<N>_<trial>
+dirs, and one JSON summary goes to stdout.
 """
 
 from __future__ import annotations
@@ -42,6 +54,7 @@ import shutil
 import subprocess
 import sys
 import zipfile
+from collections import defaultdict
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORK = os.environ.get("SPARK_GRAFT_SCALING_DIR", "/tmp/bioner_scaling")
@@ -118,33 +131,110 @@ def parse_metrics_line(proc, marker: str, context: str) -> dict:
     )
 
 
-def payload(args) -> tuple[str, list[str], str, list[str]]:
-    """The workload's payload script, its arguments (with `{out}` and
-    `{n}` filled per run), its throughput key and its extra spark conf.
-    Prepares the input once."""
+# workload → payload script, throughput key, and the timed wall behind it
+PAYLOADS = {
+    "kg": ("kg_job.py", "docs_per_sec", "pipeline_sec"),
+    "neural": ("kg_job.py", "docs_per_sec", "pipeline_sec"),
+    "train": ("train_job.py", "train_sentences_per_sec", "best_epoch_sec"),
+    "analytics": ("analytics_job.py", "triples_per_sec", "analytics_sec"),
+}
+
+
+def payload(args) -> tuple[list[str], list[str]]:
+    """The workload's payload arguments (with `{out}` and `{n}` filled per
+    run) and its extra spark conf. Prepares the input once."""
     if args.workload in ("kg", "neural"):
         args.n_docs = args.n_docs or (100_000 if args.workload == "kg" else 16_000)
         pages, alias = prepare_pages(args.n_docs)
-        argv = ["--input", pages, "--alias", alias, "--output", "{out}",
+        return ["--input", pages, "--alias", alias, "--output", "{out}",
                 "--n-buckets", "32",
-                "--tagger", "dict" if args.workload == "kg" else "neural"]
-        if args.shuffle_partitions:
-            argv += ["--shuffle-partitions", str(args.shuffle_partitions)]
-        if args.pilot_docs:
-            argv += ["--pilot-docs", str(args.pilot_docs)]
-        return "kg_job.py", argv, "docs_per_sec", []
+                "--tagger", "dict" if args.workload == "kg" else "neural"], []
     if args.workload == "train":
         argv = ["--n-sentences", str(args.n_sentences), "--batch", str(args.batch),
                 "--epochs", str(args.epochs), "--n-shards", "{n}"]
         if args.batch_norm:
             argv.append("--batch-norm")
-        return "train_job.py", argv, "train_sentences_per_sec", []
+        return argv, []
     triples = prepare_triples(args.n_ent, args.n_edges)
-    # 96 shuffle partitions at both levels unless given: the fixed-cost
-    # amortization kg_job's own default gives the pipeline (a
-    # core-count-sized shuffle under-splits the smaller level)
-    conf = [f"spark.sql.shuffle.partitions={args.shuffle_partitions or 96}"]
-    return "analytics_job.py", ["--triples", triples, "--out", "{out}"], "triples_per_sec", conf
+    # 96 shuffle partitions at both levels: the fixed-cost amortization
+    # kg_job's own floor gives the pipeline (a core-count-sized shuffle
+    # under-splits the smaller level); a later --conf overrides it
+    return (["--triples", triples, "--out", "{out}"],
+            ["spark.sql.shuffle.partitions=96"])
+
+
+def stage_report(lines) -> dict:
+    """Event-log JSON lines → the per-stage evidence of the job group
+    `timed`, which each payload sets around its timed section.
+
+    `stages` maps each stage name (call site reduced to the file name) to
+    wall_s (Submission → Completion, summed over a stage's attempts, as
+    its task metrics sum over all attempts), task_s (executor run time),
+    cpu_s (executor CPU time), gc_s, shuffle_mb (read + written), spill_mb
+    (memory + disk) and tasks. `no_stage_s` is the part of the window from
+    the group's first job submission to its last job completion that no
+    stage attempt covers."""
+    group_jobs: set[int] = set()
+    group_stages: set[int] = set()
+    start, end = float("inf"), 0
+    names: dict[int, str] = {}
+    spans: list[tuple[int, int]] = []
+    stats: dict[int, dict] = defaultdict(lambda: dict.fromkeys(
+        ("wall_s", "task_s", "cpu_s", "gc_s", "shuffle_mb", "spill_mb", "tasks"), 0))
+    for line in lines:
+        ev = json.loads(line)
+        kind = ev.get("Event")
+        if kind == "SparkListenerJobStart":
+            if (ev.get("Properties") or {}).get("spark.jobGroup.id") == "timed":
+                group_jobs.add(ev["Job ID"])
+                group_stages.update(ev["Stage IDs"])
+                start = min(start, ev["Submission Time"])
+        elif kind == "SparkListenerJobEnd" and ev["Job ID"] in group_jobs:
+            end = max(end, ev["Completion Time"])
+        elif kind == "SparkListenerStageCompleted":
+            si = ev["Stage Info"]
+            sid = si["Stage ID"]
+            if sid in group_stages and si.get("Submission Time") and si.get("Completion Time"):
+                name, _, site = si["Stage Name"].partition(" at ")
+                names[sid] = f"{name} at {os.path.basename(site)}" if site else name
+                spans.append((si["Submission Time"], si["Completion Time"]))
+                stats[sid]["wall_s"] += (si["Completion Time"] - si["Submission Time"]) / 1e3
+        elif kind == "SparkListenerTaskEnd" and ev["Stage ID"] in group_stages:
+            m = ev.get("Task Metrics") or {}
+            read = m.get("Shuffle Read Metrics") or {}
+            s = stats[ev["Stage ID"]]
+            s["task_s"] += m.get("Executor Run Time", 0) / 1e3
+            s["cpu_s"] += m.get("Executor CPU Time", 0) / 1e9
+            s["gc_s"] += m.get("JVM GC Time", 0) / 1e3
+            s["shuffle_mb"] += (read.get("Local Bytes Read", 0) + read.get("Remote Bytes Read", 0)
+                                + (m.get("Shuffle Write Metrics") or {}).get(
+                                    "Shuffle Bytes Written", 0)) / 1e6
+            s["spill_mb"] += (m.get("Memory Bytes Spilled", 0)
+                              + m.get("Disk Bytes Spilled", 0)) / 1e6
+            s["tasks"] += 1
+    by_name: dict[str, dict] = {}
+    for sid, name in sorted(names.items()):
+        agg = by_name.setdefault(name, dict.fromkeys(stats[sid], 0))
+        for k, v in stats[sid].items():
+            agg[k] += v
+    covered, reach = 0, start
+    for sub, comp in sorted(spans):
+        sub, comp = max(sub, reach), min(comp, end)
+        if comp > sub:
+            covered += comp - sub
+            reach = comp
+    return {
+        "stages": {n: {k: round(v, 2) for k, v in s.items()} for n, s in by_name.items()},
+        "no_stage_s": round((max(end - start, 0) - covered) / 1e3, 2),
+    }
+
+
+def event_log(events_dir: str) -> str:
+    """The one finished event log a payload wrote into `events_dir`."""
+    logs = [f for f in os.listdir(events_dir) if not f.endswith(".inprogress")]
+    if len(logs) != 1:
+        raise RuntimeError(f"expected one finished event log in {events_dir}, found {logs}")
+    return os.path.join(events_dir, logs[0])
 
 
 # numpy/BLAS threads pinned to each executor's one core: OpenBLAS defaults
@@ -158,14 +248,21 @@ BLAS_CONF = [
                 "VECLIB_MAXIMUM_THREADS", "NUMEXPR_NUM_THREADS")
 ]
 
+# one plain JSON-lines file per run, as stage_report reads it
+EVENT_LOG_CONF = [
+    "spark.eventLog.enabled=true",
+    "spark.eventLog.compress=false",
+    "spark.eventLog.rolling.enabled=false",
+]
+
 
 def run_level(n_exec: int, mem_mb: int, conf: list[str], job: list[str],
               key: str, trials: int) -> dict:
     """The best of `trials` spark-submits of `job` at `n_exec` single-core
-    executor JVMs of `mem_mb` each, driver included. Shuffle/spill dirs go
-    to tmpfs — concurrent executors saturated this VM's /tmp disk, which
-    would measure the disk, not the engine; a real cluster has per-node
-    NVMe."""
+    executor JVMs of `mem_mb` each, driver included, with the per-stage
+    report of its event log. Shuffle/spill dirs go to tmpfs — concurrent
+    executors saturated this VM's /tmp disk, which would measure the disk,
+    not the engine; a real cluster has per-node NVMe."""
     shm_dir = "/dev/shm/spark-local"
     os.makedirs(shm_dir, exist_ok=True)
     cmd = [
@@ -174,19 +271,28 @@ def run_level(n_exec: int, mem_mb: int, conf: list[str], job: list[str],
         "--driver-memory", f"{mem_mb}m",
         "--executor-memory", f"{mem_mb}m",
     ]
-    for kv in [f"spark.local.dir={shm_dir}", *BLAS_CONF, *conf]:
+    # the event-log keys last, so no --conf changes the format stage_report reads
+    for kv in [f"spark.local.dir={shm_dir}", *BLAS_CONF, *conf, *EVENT_LOG_CONF]:
         cmd += ["--conf", kv]
     out = f"{WORK}/out_{n_exec}"
-    cmd += [a.format(out=out, n=n_exec) for a in job]
+    job = [a.format(out=out, n=n_exec) for a in job]
     runs = []
-    for _ in range(trials):
-        # a fresh output dir per run, so kg_job's resume never skips
+    for trial in range(trials):
+        # a fresh output dir per run, so kg_job's resume never skips, and
+        # a fresh event-log dir, so it holds this run's log only
+        events = f"{WORK}/events/{n_exec}_{trial}"
         shutil.rmtree(out, ignore_errors=True)
-        proc = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO, timeout=3600)
-        runs.append(parse_metrics_line(
-            proc, f'"{key}"', f"local-cluster[{n_exec},1,{mem_mb}]"))
-    best = max(runs, key=lambda r: r[key])
-    best["trials"] = [r[key] for r in runs]
+        shutil.rmtree(events, ignore_errors=True)
+        os.makedirs(events)
+        proc = subprocess.run(
+            [*cmd, "--conf", f"spark.eventLog.dir=file://{events}", *job],
+            capture_output=True, text=True, cwd=REPO, timeout=3600)
+        runs.append((parse_metrics_line(
+            proc, f'"{key}"', f"local-cluster[{n_exec},1,{mem_mb}]"), events))
+    best, events = max(runs, key=lambda r: r[0][key])
+    with open(event_log(events), encoding="utf-8") as f:
+        best.update(stage_report(f))
+    best["trials"] = [r[key] for r, _ in runs]
     best["executors"] = n_exec
     return best
 
@@ -194,31 +300,23 @@ def run_level(n_exec: int, mem_mb: int, conf: list[str], job: list[str],
 def main() -> None:
     ap = argparse.ArgumentParser(
         description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
-    ap.add_argument("--workload", choices=["kg", "neural", "train", "analytics"],
-                    default="kg")
+    ap.add_argument("--workload", choices=list(PAYLOADS), default="kg")
     ap.add_argument("--cores", type=int, nargs=2, default=[1, 4],
                     help="executor counts: N and 4N single-core executor JVMs")
     ap.add_argument("--trials", type=int, default=1,
                     help="runs per level; the best throughput is reported")
     ap.add_argument("--conf", action="append", default=[], dest="extra_conf",
                     metavar="K=V", help="extra spark conf, repeatable")
-    ap.add_argument("--event-log-dir", default=None,
-                    help="enable Spark event logs (for scripts/stage_forensics.py)")
-    ap.add_argument("--shuffle-partitions", type=int, default=None,
-                    help="fixed shuffle partitions at BOTH levels (default: "
-                         "kg_job's per-core heuristic; 96 for analytics)")
     g = ap.add_argument_group("kg / neural")
     # Each default sizes the slower (N=1) level to 6-7 minutes on a
     # 4-vCPU/15 GB box, inside a ~10-minute budget, so fixed per-job cost
-    # (~50 s of driver planning, per-bucket manifest jobs, executor start)
-    # is a small share of the wall: at 4,000 kg docs it was most of it
-    # (efficiency 0.232; 0.541 at 100k). 200k kg docs overflow the 1.6 GB
-    # executor heap at N=1. The neural tagger costs ~7x more per doc.
+    # (per-bucket manifest jobs, executor start) is a small share of the
+    # wall: at 4,000 kg docs it was most of it (efficiency 0.232; 0.541 at
+    # 100k). At 100k the driver-side time between stages (no_stage_s) is
+    # ~5 s at both levels. 200k kg docs overflow the 1.6 GB executor heap
+    # at N=1. The neural tagger costs ~7x more per doc.
     g.add_argument("--n-docs", type=int, default=None,
                    help="default 100000 (kg), 16000 (neural)")
-    g.add_argument("--pilot-docs", type=int, default=0,
-                   help="kg_job --pilot-docs: untimed full-pipeline warmup "
-                        "pass before the timed section at BOTH levels")
     g = ap.add_argument_group("train")
     # 8,192 sentences: the N=1 level takes ~6 minutes (3 epochs of ~70 s
     # plus setup); each step's fixed sync cost weighs less than at 4,096
@@ -239,26 +337,27 @@ def main() -> None:
 
     from bioner_spark.session import memory_share_mb
 
-    script, argv, key, conf = payload(args)
+    script, key, wall_key = PAYLOADS[args.workload]
+    argv, conf = payload(args)
     conf += args.extra_conf
-    if args.event_log_dir:
-        os.makedirs(args.event_log_dir, exist_ok=True)
-        conf += ["spark.eventLog.enabled=true",
-                 f"spark.eventLog.dir=file://{args.event_log_dir}"]
     job = ["--py-files", make_zip(), os.path.join(REPO, "scripts", script), *argv]
     mem_mb = memory_share_mb(max(args.cores) + 1)
     lo, hi = (run_level(n, mem_mb, conf, job, key, args.trials) for n in args.cores)
     eff = (hi[key] / lo[key]) / (args.cores[1] / args.cores[0])
+    # T(N) = F + P/N through both levels' timed walls
+    parallel = ((lo[wall_key] - hi[wall_key])
+                / (1 / args.cores[0] - 1 / args.cores[1]))
     print(json.dumps({
         "args": vars(args),
         "memory_mb": mem_mb,
         "throughput_key": key,
         "levels": [lo, hi],
+        "fixed_s": round(lo[wall_key] - parallel / args.cores[0], 1),
+        "parallel_s": round(parallel, 1),
         "scaling_efficiency": round(eff, 3),
         "target": 0.8,
         "pass": eff >= 0.8,
     }))
-
 
 if __name__ == "__main__":
     main()

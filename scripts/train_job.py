@@ -87,6 +87,7 @@ def main() -> None:
         batch_norm=args.batch_norm, bn_identity=args.batch_norm,
     )
 
+    spark.sparkContext.setJobGroup("timed", "train_distributed")
     t0 = time.time()
     res = train_distributed(
         spark, train_df, val_df, model,

@@ -391,3 +391,36 @@ def test_pagerank_failure_mid_iteration_releases_caches(spark, small, tmp_path, 
         KA.pagerank(small, iterations=3, checkpoint_dir=str(tmp_path / "ckpt"))
     assert len(calls) == 2
     assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+
+
+def _plan_nodes(plan, name):
+    """Physical-plan nodes called `name` (a ReusedExchange is its own
+    leaf, so it never counts as the Exchange it reuses)."""
+    children = plan.children()
+    return (plan.nodeName() == name) + sum(
+        _plan_nodes(children.apply(i), name) for i in range(children.size())
+    )
+
+
+def test_analytics_plan_shuffle_budget(spark, tmp_path):
+    """Plan shape, AQE off, over a parquet triples table: entity_degree
+    is one groupBy over distinct-then-count sides (no Expand), and PMI
+    shuffles pairs, both marginals and the single-partition total once
+    each — the total reuses the pair exchange."""
+    path = str(tmp_path / "triples")
+    _triples(spark, [
+        (f"e{i % 211}", ("treats", "causes")[i % 2], f"e{i * 7 % 307}", i % 53, i % 5)
+        for i in range(5_000)
+    ]).write.parquet(path)
+    triples = spark.read.parquet(path)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        degree = entity_degree(triples)._jdf.queryExecution().executedPlan()
+        pmi = cooccurrence_pmi(triples)._jdf.queryExecution().executedPlan()
+        assert _plan_nodes(degree, "Expand") == 0
+        assert _plan_nodes(degree, "Exchange") == 4
+        assert _plan_nodes(pmi, "Exchange") == 4
+        assert _plan_nodes(pmi, "ReusedExchange") == 1
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
