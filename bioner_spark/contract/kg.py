@@ -31,9 +31,9 @@ def _kg_linked(spark: SparkSession, sf_dir: str):
     """documents → gazetteer match → overlap resolve → canonicalize.
     Returns (linked_mentions_with_component, tokens).
 
-    Uses the pipeline's fast path (linking.dict_mentions): resolved matches
-    ARE the mentions, already carrying canonical_id under the same min-id
-    ambiguity rule — no BIO round-trip. The second return value feeds the
+    Uses the pipeline's gazetteer through its token-table adapter
+    (linking.dict_mentions): resolved matches ARE the mentions, already
+    carrying canonical_id under the same min-id ambiguity rule. The second return value feeds the
     triple extractor's verb scan, which reads raw token text only."""
     alias = _alias_df(spark)
     toks = _tokens(spark, sf_dir)

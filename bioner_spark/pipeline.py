@@ -1,8 +1,16 @@
 """End-to-end KG construction pipeline with checkpointed resume.
 
-    pages → extract_text → tokenize → tag (dict | neural) → span decode
+    pages → dedupe per url → extract_text → tag (dict | neural)
           → link → canonicalize (connected components) → triples
           → partitioned Parquet + per-partition lineage manifest
+
+Dict tagger (the default and the bench path): one row per sentence after
+the extract. The gazetteer matches inside each sentence's word array, the
+matches get ONE (url, sentence) groupBy carrying the words, and overlap
+resolution, linking, pairs and the predicate lookup run in that row
+(linking.py, triples.py). Every rule is local to one sentence, so there is
+no token table, window, self-join or cache: two shuffles over page or
+sentence rows in all, the url repartition and that groupBy.
 
 Resume model (the engine analogue of the reference's best-checkpoint sink,
 reference bioner/model/annotator.py:143-150, reinterpreted for a batch job —
@@ -25,12 +33,15 @@ should be the only Python that runs. Each manifest append (removed,
 pending, done) writes one file (coalesce(1)), not one per slice of its
 local relation, so a fresh run adds two files to the manifest.
 
-Skew handling: pages are repartitioned by hash(url) before the tokenize→tag
-stages — a few hosts owning ~30% of a crawl (corpus.py models this) spread
-evenly because the key is the full url, not the host; every keyed stage
-after tokenize re-shuffles on (doc, sentence), which de-skews giant
-documents one explode later. Kept deliberately free of low-cardinality salt
-keys (see the in-function note).
+Skew handling: pages are repartitioned by hash(url) before the extract —
+a few hosts owning ~30% of a crawl (corpus.py models this) spread evenly
+because the key is the full url, not the host. Kept deliberately free of
+low-cardinality salt keys (see the in-function note). The neural tagger
+keeps a token table (tags are per token): it is persisted as the hub of
+that path's DAG and counted eagerly, keyed on an 8-byte url hash (slim
+spine) and re-keyed to the url at the end, and its keyed stages
+re-shuffle on (doc, sentence), which de-skews giant documents one explode
+later (_neural_triples).
 """
 
 from __future__ import annotations
@@ -43,12 +54,17 @@ from pyspark.sql import types as T
 
 from bioner_spark.extract import with_extracted_text
 from bioner_spark.graph import canonical_map
-from bioner_spark.linking import dict_mentions, dict_tag_tokens, link_mentions
+from bioner_spark.linking import (
+    dict_tag_tokens,
+    link_mentions,
+    resolved_per_sentence,
+    sentence_candidates,
+)
 from bioner_spark.schemas import TRIPLES_SCHEMA
 from bioner_spark.session import local_frame
 from bioner_spark.spans import decode_spans
-from bioner_spark.tokenizer import tokenize
-from bioner_spark.triples import extract_triples
+from bioner_spark.tokenizer import sentence_words, tokenize
+from bioner_spark.triples import extract_triples, sentence_triples
 
 
 @dataclass
@@ -59,9 +75,10 @@ class PipelineResult:
     tokens: DataFrame | None
     n_buckets_processed: int = 0
     n_buckets_skipped: int = 0
-    # DataFrames build_triples persisted for stage reuse; callers that are
-    # done with the result should unpersist() so a driver looping over many
-    # inputs doesn't accumulate dead cache entries for the session lifetime
+    # DataFrames build_triples persisted for stage reuse (neural tagger
+    # only); callers that are done with the result should unpersist() so a
+    # driver looping over many inputs doesn't accumulate dead cache entries
+    # for the session lifetime
     persisted: tuple = ()
     # run_checkpointed only: [(bucket, input_fingerprint, n_docs)] for ALL
     # buckets of this input — secondary sinks (e.g. the Iceberg mirror)
@@ -85,139 +102,129 @@ def build_triples(
 ) -> PipelineResult:
     """The logical plan for the whole pipeline (no writes).
 
-    Eager: canonical_map's 1-2 small jobs over alias_dict, then one count()
-    that materializes the persisted token/tag hub before returning. Without
-    that count, the final job's independent exchanges (candidates, tag
-    join-back, verb scan) are submitted CONCURRENTLY by AQE, each misses the
-    still-empty cache, and each recomputes the full extract+tokenize lineage
-    — measured 4× redundant CPU at 32 cores (and, perversely, anti-scaling:
-    more cores → more concurrent cache misses). One eager pass costs one
-    traversal and makes every later read a cache hit. The hub is returned
-    in `persisted` for the caller to release; if building raises, it is
-    released here."""
+    Eager: canonical_map's 1-2 small jobs over alias_dict. The dict tagger
+    is otherwise lazy and caches nothing; the neural tagger persists and
+    counts its token/tag hub (_neural_triples). `mentions` are the linked
+    mentions, with `component`; `tokens` is the lazy BIO tag view."""
     if tagger not in ("dict", "neural"):
         raise ValueError(f"unknown tagger: {tagger}")
     # depends only on alias_dict; run before anything is persisted
     components = canonical_map(alias_dict)
-    # (doc_key, url) map for the output joins — derived from the RAW input
-    # so its lineage is a column-pruned scan of `url` alone; deriving it
-    # downstream would drag the extractor UDF + repartition exchange into
-    # every broadcast of this tiny table. dropDuplicates: crawls commonly
-    # contain repeated urls, and a duplicated map row would multiply every
-    # triple/mention of that document in the _rekey join below.
-    url_map = pages.select(F.xxhash64("url").alias("doc_key"), "url").dropDuplicates(
-        ["doc_key"]
-    )
 
-    # Spread pages evenly BEFORE the heavy per-token stages. Hashing the full
-    # url (not the host) already de-skews crawl hot-hosts — a host owning 30%
-    # of the crawl still spreads over all partitions because no downstream
-    # stage keys on host. (An earlier version partitioned on
-    # pmod(hash(url), salt_factor), which caps the stage at salt_factor
-    # non-empty partitions — a silent parallelism ceiling; don't do that.)
-    # Giant documents: the per-page extract/explode is inherently one row's
-    # work, but every keyed stage after tokenize re-shuffles on
-    # (doc, sentence), so a 10^5-sentence page spreads right after explode;
-    # Arrow batching bounds UDF memory per batch.
+    # Spread pages evenly BEFORE the heavy per-page stages. Hashing the
+    # full url (not the host) de-skews crawl hot-hosts; an earlier
+    # pmod(hash(url), salt_factor) key capped the stage at salt_factor
+    # non-empty partitions — a silent parallelism ceiling; don't do that.
+    # The explicit count keeps AQE from coalescing this byte-small shuffle
+    # into one partition (the whole extract UDF then ran as ONE task): it
+    # never coalesces REPARTITION_BY_NUM. Giant documents: the per-page
+    # extract is one row's work; Arrow batching bounds UDF memory.
     payload = "html" if use_extractor else "text"
-    pages = pages.select("url", payload).repartition(F.col("url"))
+    n_parts = int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    deduped = pages.select("url", payload).repartition(n_parts, F.col("url"))
 
     # EXACTLY ONE document per url, chosen deterministically (max payload
     # BYTES — a recrawl that caught a truncated error page must not beat
     # the complete copy, so the ordering key is length first; ties broken
     # by payload bytes, so equal-length copies still pick one copy
     # deterministically): crawls commonly contain recrawled urls, and
-    # without this both copies would share doc_key with colliding
-    # (sentence_id, token_id) token keys — tied window orderings downstream
-    # would then interleave the copies nondeterministically per run/retry.
+    # without this both copies would share doc_id and their sentences and
+    # tokens would interleave.
     # The groupBy reuses the url hash partitioning above (no extra
     # exchange), and deduping BEFORE the extractor also avoids paying the
     # extract UDF per duplicate copy.
     # octet_length, not length: length() counts CHARACTERS on a string
     # payload, and a 999-char multibyte copy can carry more bytes than a
     # 1000-char ASCII one — the rule is bytes for string and binary alike.
-    pages = pages.groupBy("url").agg(
+    deduped = deduped.groupBy("url").agg(
         F.max_by(
             F.col(payload), F.struct(F.octet_length(payload), F.col(payload))
         ).alias(payload)
     )
-
     if use_extractor:
-        pages = with_extracted_text(pages, "html", "text")
+        deduped = with_extracted_text(deduped, "html", "text")
+    deduped = deduped.select("url", "text")
 
-    # Slim spine: every keyed stage between here and the final output
-    # shuffles/sorts the token table, so its key is an 8-byte
-    # xxhash64(url) instead of the ~30-byte url string (measured ~40%
-    # faster window stages — this workload is memory-bandwidth-bound).
-    # The url reappears exactly once, in the output joins below.
-    # (64-bit collisions merge documents at ~(n²/2^65); fine to ~10^9 docs
-    # per job — at full 10^12-doc scale partition the crawl into jobs, or
-    # swap in a 128-bit fingerprint here.)
-    pages = pages.select(F.xxhash64("url").alias("doc_key"), "text")
+    if tagger == "neural":
+        return _neural_triples(pages, deduped, alias_dict, components, model, vocab, ft_model)
+    # one row per sentence from here on (module docstring); doc_id is the
+    # url throughout, so nothing is re-keyed
+    per_sent = resolved_per_sentence(
+        sentence_candidates(
+            sentence_words(deduped), alias_dict, components=components, carry=("w",)
+        ),
+        carry=("w",),
+    )
+    mentions = per_sent.select("doc_id", "sentence_id", F.inline("ms"))
+    tokens = tokenize(deduped, with_offsets=False)
+    return PipelineResult(
+        triples=sentence_triples(per_sent),
+        mentions=mentions,
+        tokens=dict_tag_tokens(tokens, alias_dict, spans=mentions),
+    )
 
-    # The token table is the hub of the DAG: gazetteer candidates, the
-    # tag join-back, the verb lexicon scan and the final output all read
-    # it. Without persisting, every AQE runtime-broadcast of a small
-    # derived side RE-RUNS the extract-UDF + tokenize lineage (measured:
-    # ~12 broadcast subquery jobs × 30 s at 8k docs). MEMORY_AND_DISK —
-    # spills, never OOMs; at 100 TB this is the standard stage-reuse
-    # materialization (or a checkpoint to DFS).
-    # with_offsets=False: the KG path never reads char offsets, and the
-    # offset aggregate costs ~8× the tokenization itself.
+
+def _neural_triples(
+    pages, deduped, alias_dict, components, model, vocab, ft_model
+) -> PipelineResult:
+    """build_triples for the neural tagger, from the deduplicated (url,
+    text) pages on. Tags are per token, so this path keeps a token table
+    as the hub of its DAG: persisted, and counted before returning.
+    Without the count, AQE submits the final job's independent exchanges
+    concurrently, each misses the still-empty cache and recomputes the
+    extract+tokenize lineage (measured 4× redundant CPU at 32 cores; more
+    cores → more concurrent misses). The caches are returned in
+    `persisted`; if building raises, they are released here."""
     from pyspark import StorageLevel
 
-    tokens = tokenize(pages, doc_col="doc_key", with_offsets=False).persist(
-        StorageLevel.MEMORY_AND_DISK
+    from bioner_spark.ner.infer import annotate_tokens, annotate_tokens_fasttext
+
+    # Slim spine: the token table's keyed stages shuffle an 8-byte
+    # xxhash64(url), not the ~30-byte url (measured ~40% faster window
+    # stages; 64-bit collisions merge documents at ~n²/2^65, fine to ~10^9
+    # docs per job). The url comes back once, at the narrow end, from a
+    # map over the RAW input — a column-pruned scan of `url` alone, so its
+    # broadcast never drags in the extractor — deduplicated so a repeated
+    # url cannot multiply that document's rows.
+    url_map = pages.select(F.xxhash64("url").alias("doc_key"), "url").dropDuplicates(
+        ["doc_key"]
     )
+    # with_offsets=False: the KG path never reads char offsets, and the
+    # offset aggregate costs ~8× the tokenization itself. Every keyed stage
+    # after tokenize re-shuffles on (doc, sentence), which de-skews giant
+    # documents one explode later.
+    tokens = tokenize(
+        deduped.select(F.xxhash64("url").alias("doc_key"), "text"),
+        doc_col="doc_key",
+        with_offsets=False,
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     persisted = (tokens,)
     try:
         tokens.count()
-        if tagger == "dict":
-            # gazetteer fast path: resolved dictionary matches ARE the
-            # mention spans — no BIO tag join-back, no window re-decode (see
-            # linking.dict_mentions). `tagged` stays a lazy parity view.
-            # already linked: gazetteer matches carry canonical_id (min-id
-            # ambiguity rule — same rule link_mentions applies)
-            mentions = dict_mentions(tokens, alias_dict)
-            # share the already-built mention spans: the parity tag view
-            # must not re-plan the whole gazetteer chain over the token table
-            tagged = dict_tag_tokens(tokens, alias_dict, spans=mentions)
-            linked = mentions
+        if ft_model is not None:
+            # BioNER-shape encode: fastText subword embeddings (e.g. a
+            # real .bin loaded by fasttext_bin.load_bin) instead of the
+            # trigram multi-hot vocab — reference fasttext_encoder.py:17-28
+            assert model is not None
+            tagged = annotate_tokens_fasttext(tokens, ft_model, model)
         else:
-            from bioner_spark.ner.infer import annotate_tokens, annotate_tokens_fasttext
-
-            if ft_model is not None:
-                # BioNER-shape encode: fastText subword embeddings (e.g. a
-                # real .bin loaded by fasttext_bin.load_bin) instead of the
-                # trigram multi-hot vocab — reference fasttext_encoder.py:17-28
-                assert model is not None
-                tagged = annotate_tokens_fasttext(tokens, ft_model, model)
-            else:
-                assert model is not None and vocab is not None
-                tagged = annotate_tokens(tokens, vocab, model)
-            tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
-            persisted += (tagged,)
-            tagged.count()
-            mentions = decode_spans(tagged)
-            linked = link_mentions(mentions, alias_dict)
+            assert model is not None and vocab is not None
+            tagged = annotate_tokens(tokens, vocab, model)
+        tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
+        persisted += (tagged,)
+        tagged.count()
+        linked = link_mentions(decode_spans(tagged), alias_dict)
     except BaseException:
         for df in persisted:
             df.unpersist()
         raise
     linked = linked.join(F.broadcast(components), "canonical_id", "left")
-    # unlinkable mentions (neural path, surface form outside alias_dict →
-    # canonical_id/component NULL) are dropped from the TRIPLE stream only
-    # — pairs read `component` — but stay in the returned mentions, per
-    # link_mentions' documented kept-for-recall-analysis contract (on the
-    # dict path every mention links, so the filter is a no-op there)
-    linkable = linked.filter(F.col("component").isNotNull())
-    # verbs come from the raw token table (tags are irrelevant to the
-    # predicate scan) — keeps the lazy `tagged` parity view out of the plan
-    triples = extract_triples(linkable, tokens)
+    # unlinkable mentions (surface form outside alias_dict → component
+    # NULL) are dropped from the TRIPLE stream only, and stay in the
+    # returned mentions (link_mentions' kept-for-recall-analysis contract).
+    # Verbs come from the raw token table: tags are irrelevant to them.
+    triples = extract_triples(linked.filter(F.col("component").isNotNull()), tokens)
 
-    # doc_key → url, once, at the narrow end of the funnel (triples and
-    # mentions are ~50× smaller than tokens). AQE broadcasts url_map when
-    # it fits; at 10^12 docs this is one shuffle join on slim rows.
     def _rekey(df: DataFrame) -> DataFrame:
         cols = [c for c in df.columns if c != "doc_id"]
         return (
@@ -338,20 +345,23 @@ def read_manifest(spark: SparkSession, manifest_path: str) -> DataFrame | None:
     blip, corrupt footer on a manifest that HAS committed files — must
     RAISE: swallowing it would silently discard all resume state,
     recompute every bucket (hours at scale) and append duplicate 'done'
-    rows, indistinguishable from a first run in the logs."""
+    rows, indistinguishable from a first run in the logs.
+
+    The path is checked before reading: reading a missing path logs a
+    FileNotFoundException stack trace on every fresh run."""
     from pyspark.errors import AnalysisException
 
+    fs, jpath = _hadoop_fs(spark, manifest_path)
+    if not fs.exists(jpath):
+        return None
     try:
         return spark.read.parquet(manifest_path)
     except AnalysisException as e:
         msg = str(e)
-        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return None
         if "UNABLE_TO_INFER_SCHEMA" in msg or "Unable to infer schema" in msg:
             # distinguish crash debris from corruption by whether any
             # parquet file was ever COMMITTED (committers rename finished
             # files out of _temporary/; hidden dirs never hold committed data)
-            fs, jpath = _hadoop_fs(spark, manifest_path)
             for st in fs.listStatus(jpath):
                 name = st.getPath().getName()
                 if st.isFile() and name.endswith(".parquet"):

@@ -7,12 +7,12 @@ that to a real incremental path:
 
   * `run_ingest_once` — new page files landing in a directory are picked up
     by `readStream` and each micro-batch is run through the SAME batch
-    lineage the pipeline uses (extract → tokenize → gazetteer fast-path
-    mentions, linking.dict_mentions) via `foreachBatch`. The window-based
-    span re-decode Structured Streaming forbids in-stream is also the path
-    the batch pipeline deliberately skips, so batch and streaming share one
-    implementation AND one plan shape. Source offsets live in the
-    checkpoint → restarts re-process at most the last in-flight
+    lineage the pipeline uses (extract → one row per sentence → gazetteer
+    mentions, linking.sentence_candidates) via `foreachBatch`. No token
+    table, no window: the gazetteer matches inside each sentence row and
+    resolves overlaps after one (doc, sentence) groupBy, so batch and
+    streaming share one implementation AND one plan shape. Source offsets
+    live in the checkpoint → restarts re-process at most the last in-flight
     micro-batch; the write dedupes on (doc_id, batch file) by overwriting
     per-micro-batch output dirs idempotently.
 
@@ -33,9 +33,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bioner_spark.extract import with_extracted_text
-from bioner_spark.linking import dict_mentions
+from bioner_spark.linking import resolve_overlaps, sentence_candidates
 from bioner_spark.schemas import PAGES_SCHEMA
-from bioner_spark.tokenizer import tokenize
+from bioner_spark.tokenizer import sentence_words, tokenize
 
 
 def read_page_stream(
@@ -54,16 +54,14 @@ def batch_mentions(pages: DataFrame, alias_dict: DataFrame) -> DataFrame:
     """pages (batch DF) → linked mentions. The shared batch/streaming body —
     called directly in batch jobs and from foreachBatch in streaming.
 
-    Uses the gazetteer FAST path (`dict_mentions`: resolved candidates ARE
-    the spans, already linked by the same min-canonical-id rule) — the BIO
+    Uses the gazetteer's sentence-level entry (`sentence_candidates`:
+    resolved candidates ARE the spans, already linked by the same
+    min-canonical-id rule) straight from the sentence rows — the BIO
     round-trip (`dict_tag_tokens` → `decode_spans` → `link_mentions`) the
     batch pipeline also skips is a full-token-table tag join-back plus a
-    window re-decode per micro-batch, pure parity machinery
-    (linking.py:156-161). with_offsets=False: mentions are token-span
-    addressed; the char-offset aggregate costs ~8× the tokenization."""
+    window re-decode per micro-batch, pure parity machinery."""
     extracted = with_extracted_text(pages.select("url", "html"))
-    tokens = tokenize(extracted, with_offsets=False)
-    return dict_mentions(tokens, alias_dict)
+    return resolve_overlaps(sentence_candidates(sentence_words(extracted), alias_dict))
 
 
 def run_ingest_once(

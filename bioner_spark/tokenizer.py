@@ -41,6 +41,18 @@ def split_sentences(
     )
 
 
+def sentence_words(pages: DataFrame) -> DataFrame:
+    """(url, text) pages → (doc_id, sentence_id, w): w is the sentence's
+    lowercased non-empty tokens in order, so position i of w is the
+    token_id `tokenize` gives the same token — one row per sentence, no
+    token table."""
+    return split_sentences(pages).select(
+        "doc_id",
+        F.col("sentence_id").cast("int").alias("sentence_id"),
+        F.array_remove(F.split(F.lower(F.col("sentence")), " "), "").alias("w"),
+    )
+
+
 def tokenize(
     pages: DataFrame,
     doc_col: str = "url",
@@ -60,32 +72,19 @@ def tokenize(
     """
     sents = split_sentences(pages, doc_col=doc_col, text_col=text_col, carry_cols=carry_cols)
     if not with_offsets:
-        return (
-            sents.select(
-                "doc_id",
-                *[F.col(c) for c in carry_cols],
-                F.col("sentence_id").cast("int").alias("sentence_id"),
-                # filter empties BEFORE posexplode: token_id is the DENSE
-                # rank among non-empty tokens (doubled/edge spaces leave no
-                # gaps), so id arithmetic like `end_tok = start_tok +
-                # n_words - 1` in the gazetteer is exact — still a narrow
-                # array op, zero shuffle
-                F.posexplode(
-                    F.filter(
-                        F.split(F.col("sentence"), " "),
-                        lambda t: F.length(t) > 0,
-                    )
-                ).alias("token_id", "text"),
-            )
-            .select(
-                "doc_id",
-                *[F.col(c) for c in carry_cols],
-                "sentence_id",
-                F.col("token_id").cast("int"),
-                "text",
-                F.lit(None).cast("int").alias("start"),
-                F.lit(None).cast("int").alias("end"),
-            )
+        # remove empties BEFORE posexplode: token_id is the DENSE rank
+        # among non-empty tokens (doubled/edge spaces leave no gaps), so id
+        # arithmetic like the gazetteer's `end_tok = start_tok + n_words -
+        # 1` is exact — still a narrow array op, zero shuffle
+        return sents.select(
+            "doc_id",
+            *[F.col(c) for c in carry_cols],
+            F.col("sentence_id").cast("int").alias("sentence_id"),
+            F.posexplode(F.array_remove(F.split(F.col("sentence"), " "), "")).alias(
+                "token_id", "text"
+            ),
+            F.lit(None).cast("int").alias("start"),
+            F.lit(None).cast("int").alias("end"),
         )
     toks = F.split(F.col("sentence"), " ")
     # offsets[i] = cumulative (length + 1) of tokens before i — computed

@@ -11,16 +11,14 @@ in corpus.py's gold generator):
         (component = connected-components canonical form, graph.py)
   * triples are DISTINCT per (subj, pred, obj, doc_id, sentence_id).
 
-Scale notes:
-  * the mention×mention self-join is keyed on (doc_id, sentence_id) — both
-    sides come out of the span decode already hash-partitioned on those
-    keys, so the join reuses the existing exchange;
-  * sentence-level mention counts are small (≤ dozens), so the pair blowup
-    is bounded per row; crawl hot-host skew is handled upstream by the
-    full-url repartition before inference (pipeline.py — deliberately NOT
-    a low-cardinality salt key, see the anti-pattern note there);
-  * the predicate lookup joins the (tiny) verb lexicon broadcast against
-    the tokens-between range via a range condition on token_id.
+Plan: every rule above is local to one sentence, so it runs inside ONE row
+per sentence holding its mentions and predicate tokens as arrays: pairs,
+the between-verb lookup and the distinct are in-row lambdas
+(`_pair_triples`), then `inline` emits the triples — no mention self-join,
+verb range join or distinct shuffle. The gazetteer pipeline hands that row
+over from its one (doc, sentence) groupBy (`sentence_triples`);
+`extract_triples` builds it from mention and token tables. Mentions per
+sentence are few (≤ dozens), so the pair blowup is bounded per row.
 """
 
 from __future__ import annotations
@@ -32,28 +30,65 @@ from bioner_spark.metrics import exact_match_prf1
 
 DEFAULT_PREDICATES = ["treats", "causes", "inhibits", "prevents", "reduces"]
 CO_OCCURS = "co_occurs_with"
+KEY = ["doc_id", "sentence_id"]
 
 
-def mention_pairs(linked_mentions: DataFrame) -> DataFrame:
-    """Ordered same-sentence mention pairs with resolved canonical ids."""
-    m1 = linked_mentions.alias("m1")
-    m2 = linked_mentions.alias("m2")
-    return (
-        m1.join(
-            m2,
-            (F.col("m1.doc_id") == F.col("m2.doc_id"))
-            & (F.col("m1.sentence_id") == F.col("m2.sentence_id"))
-            & (F.col("m1.start_tok") < F.col("m2.start_tok")),
-            "inner",
+def _lexicon(predicates: list[str] | None) -> list[str]:
+    # normalize the lexicon like the token side: the scan lowercases token
+    # text before isin(), so a caller-supplied "Treats" would otherwise
+    # match nothing and every pair would silently fall through to
+    # co_occurs_with
+    return [p.lower() for p in (predicates or DEFAULT_PREDICATES)]
+
+
+def _pair_triples(per_sent: DataFrame) -> DataFrame:
+    """Rows (doc_id, sentence_id, ms, verbs) → distinct triples. ms: the
+    sentence's mentions (start_tok, end_tok, component); verbs: its
+    predicate tokens as (id, verb) sorted by id, or NULL when it has none.
+    Both arrive as columns, not expressions: an expression would be
+    re-evaluated for every pair inside the lambdas."""
+    ms, verbs = F.col("ms"), F.col("verbs")
+
+    def pred(m1, m2):
+        between = F.filter(
+            verbs, lambda v: (v["id"] > m1["end_tok"]) & (v["id"] < m2["start_tok"])
         )
-        .select(
-            F.col("m1.doc_id").alias("doc_id"),
-            F.col("m1.sentence_id").alias("sentence_id"),
-            F.col("m1.component").alias("subj"),
-            F.col("m2.component").alias("obj"),
-            F.col("m1.end_tok").alias("subj_end"),
-            F.col("m2.start_tok").alias("obj_start"),
+        # get, not [0]: NULL on an empty array (ANSI raises on [0])
+        return F.coalesce(F.get(between, 0)["verb"], F.lit(CO_OCCURS))
+
+    triples = F.array_distinct(
+        F.flatten(
+            F.transform(
+                ms,
+                lambda m1: F.transform(
+                    F.filter(ms, lambda m2: m1["start_tok"] < m2["start_tok"]),
+                    lambda m2: F.struct(
+                        m1["component"].alias("subj"),
+                        pred(m1, m2).alias("pred"),
+                        m2["component"].alias("obj"),
+                    ),
+                ),
+            )
         )
+    )
+    return per_sent.select(
+        F.inline(triples), "doc_id", F.col("sentence_id").cast("int").alias("sentence_id")
+    )
+
+
+def sentence_triples(per_sent: DataFrame) -> DataFrame:
+    """Gazetteer rows (doc_id, sentence_id, w, ms) — ms the sentence's
+    overlap-resolved mentions with `component`, w its lowercased words
+    (linking.resolved_per_sentence) — → distinct triples. Mentions whose
+    component is NULL are dropped first; a verb (DEFAULT_PREDICATES) has
+    its position in w as id, the token_id the tokenizer gives it."""
+    verbs = F.filter(
+        F.transform("w", lambda x, i: F.struct(i.alias("id"), x.alias("verb"))),
+        lambda v: v["verb"].isin(DEFAULT_PREDICATES),
+    )
+    linkable = F.filter("ms", lambda m: m["component"].isNotNull())
+    return _pair_triples(
+        per_sent.select(*KEY, linkable.alias("ms"), verbs.alias("verbs"))
     )
 
 
@@ -62,55 +97,30 @@ def extract_triples(
     tokens: DataFrame,
     predicates: list[str] | None = None,
 ) -> DataFrame:
-    """linked mentions (with `component`) + tokens → distinct triples."""
-    # normalize the lexicon like the token side: the scan lowercases token
-    # text before isin(), so a caller-supplied "Treats" would otherwise
-    # match nothing and every pair would silently fall through to
-    # co_occurs_with
-    predicates = [p.lower() for p in (predicates or DEFAULT_PREDICATES)]
-    pairs = mention_pairs(linked_mentions)
-    verbs = tokens.filter(F.lower(F.col("text")).isin(predicates)).select(
-        "doc_id",
-        "sentence_id",
-        F.col("token_id").alias("verb_tok"),
-        F.lower(F.col("text")).alias("verb"),
+    """linked mentions (with `component`) + tokens → distinct triples.
+
+    Mentions and predicate tokens are grouped per sentence and joined, then
+    the same in-row rule as `sentence_triples` runs. A mention whose
+    doc_id or sentence_id is NULL names no sentence and forms no pairs
+    (NULL equals no key); it is filtered out before the groupBy, which
+    would otherwise gather all such mentions into one NULL sentence."""
+    lex = _lexicon(predicates)
+    ms = (
+        linked_mentions.filter(F.col("doc_id").isNotNull() & F.col("sentence_id").isNotNull())
+        .groupBy(*KEY)
+        .agg(F.collect_list(F.struct("start_tok", "end_tok", "component")).alias("ms"))
     )
-    # the BETWEEN range is part of the JOIN CONDITION, not a post-join
-    # filter: joining on the sentence key alone materializes pairs×verbs
-    # rows per sentence before anything prunes them (a giant-doc sentence
-    # with 20 mentions and 10 predicate tokens would emit 1,900 rows into
-    # the aggregation); in the condition, non-between verbs never leave
-    # the join. LEFT join semantics unchanged — a pair with no between-verb
-    # survives with NULL verb and falls through to CO_OCCURS.
-    with_verb = (
-        pairs.alias("p").join(
-            verbs.alias("v"),
-            (F.col("p.doc_id") == F.col("v.doc_id"))
-            & (F.col("p.sentence_id") == F.col("v.sentence_id"))
-            & (F.col("v.verb_tok") > F.col("p.subj_end"))
-            & (F.col("v.verb_tok") < F.col("p.obj_start")),
-            "left",
-        )
-        .select(
-            F.col("p.doc_id").alias("doc_id"),
-            F.col("p.sentence_id").alias("sentence_id"),
-            "subj", "obj", "subj_end", "obj_start", "verb_tok", "verb",
-        )
-        .groupBy("doc_id", "sentence_id", "subj", "obj", "subj_end", "obj_start")
+    word = F.lower(F.col("text"))
+    verbs = (
+        tokens.filter(word.isin(lex))
+        .groupBy(*KEY)
         .agg(
-            F.min(
-                F.when(F.col("verb_tok").isNotNull(), F.struct("verb_tok", "verb"))
-            ).alias("first_verb")
-        )
-        .select(
-            F.col("subj"),
-            F.coalesce(F.col("first_verb.verb"), F.lit(CO_OCCURS)).alias("pred"),
-            F.col("obj"),
-            "doc_id",
-            F.col("sentence_id").cast("int").alias("sentence_id"),
+            F.array_sort(
+                F.collect_list(F.struct(F.col("token_id").alias("id"), word.alias("verb")))
+            ).alias("verbs")
         )
     )
-    return with_verb.distinct()
+    return _pair_triples(ms.join(verbs, KEY, "left"))
 
 
 def triple_prf1(pred_triples: DataFrame, gold_triples: DataFrame) -> DataFrame:

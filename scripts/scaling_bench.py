@@ -308,13 +308,13 @@ def main() -> None:
     ap.add_argument("--conf", action="append", default=[], dest="extra_conf",
                     metavar="K=V", help="extra spark conf, repeatable")
     g = ap.add_argument_group("kg / neural")
-    # Each default sizes the slower (N=1) level to 6-7 minutes on a
-    # 4-vCPU/15 GB box, inside a ~10-minute budget, so fixed per-job cost
-    # (per-bucket manifest jobs, executor start) is a small share of the
-    # wall: at 4,000 kg docs it was most of it (efficiency 0.232; 0.541 at
-    # 100k). At 100k the driver-side time between stages (no_stage_s) is
-    # ~5 s at both levels. 200k kg docs overflow the 1.6 GB executor heap
-    # at N=1. The neural tagger costs ~7x more per doc.
+    # Each default sized the slower (N=1) level to 6-7 minutes on a
+    # 4-vCPU/15 GB box, so fixed per-job cost (per-bucket manifest jobs,
+    # executor start) is a small share of the wall: at 4,000 kg docs it
+    # was most of it (efficiency 0.232; 0.541 at 100k). Building dict
+    # triples per sentence row cut kg N=1 at 100k to ~2.7 min (0.500);
+    # 200k docs now fit the 1.6 GB executor heap (~5 min, 0.623). The
+    # neural tagger costs ~7x more per doc.
     g.add_argument("--n-docs", type=int, default=None,
                    help="default 100000 (kg), 16000 (neural)")
     g = ap.add_argument_group("train")

@@ -8,6 +8,7 @@ from bioner_spark.graph import canonical_map, connected_components
 from bioner_spark.linking import (
     alias_edges,
     candidate_mentions,
+    dict_mentions,
     dict_tag_tokens,
     link_mentions,
     resolve_overlaps,
@@ -133,3 +134,33 @@ def test_canonical_map_null_alias_never_merges(spark):
     }
     assert driver == expected
     assert dist == expected
+
+
+def test_gazetteer_on_token_ids_with_gaps_and_chained_aliases(spark):
+    """The token-table adapter numbers spans by the tokens' own ids: a
+    sentence whose token_ids have gaps gives start_tok = the matched
+    token's id and end_tok = start_tok + n_words - 1, whatever the ids of
+    the tokens that follow. The chained 'a b'/'b c'/'c d' aliases keep only
+    the first span (the one-shot overlap rule); a second sentence holds
+    a 1-word match after a gap and a 2-word match across one."""
+    toks = spark.createDataFrame(
+        [
+            ("d", 0, 10, "A"), ("d", 0, 11, "b"), ("d", 0, 12, "c"), ("d", 0, 20, "d"),
+            ("d", 1, 3, "x"), ("d", 1, 7, "y"), ("d", 1, 9, "z"),
+        ],
+        "doc_id string, sentence_id int, token_id int, text string",
+    )
+    alias = spark.createDataFrame(
+        [("a b", "X1"), ("b c", "X2"), ("c d", "X3"), ("y", "Y1"), ("y z", "Y2")],
+        "alias string, canonical_id string",
+    )
+    cands = sorted(tuple(r) for r in candidate_mentions(toks, alias).collect())
+    assert cands == [
+        ("d", 0, 10, 11, "X1", "a b"),
+        ("d", 0, 11, 12, "X2", "b c"),
+        ("d", 0, 12, 13, "X3", "c d"),
+        ("d", 1, 7, 7, "Y1", "y"),
+        ("d", 1, 7, 8, "Y2", "y z"),
+    ]
+    kept = sorted(tuple(r) for r in dict_mentions(toks, alias).collect())
+    assert kept == [("d", 0, 10, 11, "X1", "a b"), ("d", 1, 7, 8, "Y2", "y z")]

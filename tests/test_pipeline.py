@@ -409,6 +409,83 @@ def test_extract_triples_predicates_case_insensitive(spark):
     assert len(rows) == 1 and rows[0]["pred"] == "treats"
 
 
+def test_extract_triples_null_keys_form_no_pairs(spark):
+    """Mentions whose doc_id or sentence_id is NULL form no pairs: the
+    pair rule is per (doc, sentence), and a NULL key names no sentence.
+    Grouping them would gather every NULL-keyed mention into one."""
+    from bioner_spark.triples import extract_triples
+
+    mentions = spark.createDataFrame(
+        [
+            (None, 0, 0, 0, "A"), (None, 0, 4, 4, "B"),
+            ("d", None, 0, 0, "A"), ("d", None, 4, 4, "B"),
+            ("d", 1, 0, 0, "A"), ("d", 1, 4, 4, "B"),
+        ],
+        "doc_id string, sentence_id int, start_tok int, end_tok int, component string",
+    )
+    tokens = spark.createDataFrame(
+        [(None, 0, 2, "treats"), ("d", None, 2, "treats"), ("d", 1, 2, "causes")],
+        "doc_id string, sentence_id int, token_id int, text string",
+    )
+    rows = [tuple(r) for r in extract_triples(mentions, tokens).collect()]
+    assert rows == [("A", "causes", "B", "d", 1)]
+
+
+def _plan_nodes(df) -> list[tuple]:
+    """(node name, shuffle partitioning without expression ids or count,
+    shuffle origin) per executed-plan node, following children only (a
+    cached input shows as one InMemoryTableScan)."""
+    import re
+
+    out, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        n = stack.pop()
+        name = n.nodeName().split(" (")[0]
+        if name == "Exchange":
+            part = re.sub(r"#\d+L?|, \d+\)$", "", n.outputPartitioning().toString())
+            out.append((name, part + ")", n.shuffleOrigin().toString()))
+        else:
+            out.append((name, None, None))
+        kids = n.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def test_dict_build_plan_has_two_page_shuffles_and_no_cache(spark):
+    """The dict build plans triples from one row per sentence (AQE off, so
+    the plan is the one submitted): no Window, no SortMergeJoin, no cache,
+    and over page/sentence rows only the url repartition — REPARTITION_BY_NUM,
+    which AQE never coalesces into one task — and the one (doc, sentence)
+    groupBy. The other two shuffles aggregate the alias table."""
+    from collections import Counter
+
+    corpus = corpus_mod.generate(n_docs=40)
+    pages = corpus_mod.pages_spark_df(spark, corpus)
+    alias = corpus_mod.alias_dict_spark_df(spark, corpus)
+    before = _persistent_rdd_ids(spark)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        result = build_triples(pages, alias, tagger="dict")
+        nodes = _plan_nodes(result.triples)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert result.persisted == ()
+    assert _persistent_rdd_ids(spark) - before == set()
+    names = Counter(n for n, _, _ in nodes)
+    for absent in ("Window", "SortMergeJoin", "InMemoryTableScan", "ReusedExchange"):
+        assert names[absent] == 0, absent
+    assert (names["Exchange"], names["BroadcastExchange"], names["BroadcastHashJoin"]) == (4, 3, 3)
+    assert (names["Generate"], names["ArrowEvalPython"]) == (4, 1)
+    shuffles = sorted((p, o) for _, p, o in nodes if p)
+    assert shuffles == [
+        ("hashpartitioning(doc_id, sentence_id)", "ENSURE_REQUIREMENTS"),
+        ("hashpartitioning(phrase, n_words)", "ENSURE_REQUIREMENTS"),
+        ("hashpartitioning(url)", "REPARTITION_BY_NUM"),
+        ("hashpartitioning(w0)", "ENSURE_REQUIREMENTS"),
+    ]
+
+
 def test_multiset_fingerprint_shared_law(spark):
     """One fold law for both resume-identity consumers: order-free,
     multiplicity-sensitive, and matching the 'n:xor:sum' string format
@@ -444,6 +521,21 @@ def test_read_manifest_self_heals_first_append_crash_debris(spark, tmp_path):
     ).parquet(str(man))
     got = read_manifest(spark, str(man))
     assert got is not None and got.count() == 1
+
+
+def test_read_manifest_missing_path_never_reads(spark, tmp_path, monkeypatch):
+    """A manifest that does not exist yet is None without a read attempt:
+    reading a missing path logs a FileNotFoundException stack trace on
+    every fresh run."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from bioner_spark.pipeline import read_manifest
+
+    def no_read(self, *paths, **kwargs):
+        raise AssertionError("parquet read of a missing manifest")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", no_read)
+    assert read_manifest(spark, str(tmp_path / "manifest")) is None
 
 
 def _persistent_rdd_ids(spark) -> set:
